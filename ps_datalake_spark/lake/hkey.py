@@ -15,11 +15,22 @@ The string form is the public API; the struct form is the engine's.
 from __future__ import annotations
 
 import base64
+import re
 from dataclasses import dataclass
 
 from ..errors import InvalidHkey
 
 KINDS = ("raw", "plain", "enc", "tree")
+
+# A chunk hash or convergent key: sha256, 64 lowercase hex digits. Point reads
+# build a directory name from the hash's first digits, so nothing else may pass.
+HASH_RE = re.compile(r"[0-9a-f]{64}")
+
+
+def _hex64(v: str, s: str) -> str:
+    if not HASH_RE.fullmatch(v):
+        raise InvalidHkey(s)
+    return v
 
 
 @dataclass(frozen=True)
@@ -47,10 +58,10 @@ class Hkey:
                 return Hkey(kind="raw", inline=base64.urlsafe_b64decode(rest), size=0)
             if kind in ("plain", "tree"):
                 h, sz = rest.rsplit(":", 1)
-                return Hkey(kind=kind, hash=h, size=int(sz))
+                return Hkey(kind=kind, hash=_hex64(h, s), size=int(sz))
             if kind == "enc":
                 h, key, sz = rest.split(":")
-                return Hkey(kind=kind, hash=h, key=key, size=int(sz))
+                return Hkey(kind=kind, hash=_hex64(h, s), key=_hex64(key, s), size=int(sz))
         except (ValueError, TypeError) as e:
             raise InvalidHkey(s) from e
         raise InvalidHkey(s)

@@ -156,9 +156,9 @@ def b64_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.91 s at 10x).  At real scale the scan already has enough splits and
     # the guard skips the shuffle.
     docs = _spread(T(spark, sf_dir, "documents").select("doc_id", "text"))
-    # Postings built in ONE Arrow-batched Python pass (guide §4.2; r13,
-    # measured −16% at 10x on top of the r12 spread): a per-doc Counter
-    # emits (doc_id, term, tf, dl), so
+    # Postings built in ONE Arrow-batched Python pass (guide §4.2; one
+    # exchange fewer, but timing was a wash at 10x: 1.274 s vs 1.264 s): a
+    # per-doc Counter emits (doc_id, term, tf, dl), so
     #   * the raw token stream never crosses an exchange (the old JVM
     #     explode shipped every token to the (doc_id, term) aggregate), and
     #   * dl rides each postings row — the per-doc-length shuffle+join is

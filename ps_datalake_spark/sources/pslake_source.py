@@ -44,6 +44,8 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from ..lake.store import list_chunk_files as _list_chunk_files
+
 _SCHEMA = (
     "hash string, hash_prefix string, size bigint, enc string, "
     "stored_len bigint, hash_ok int"
@@ -76,22 +78,6 @@ def _resolve_chunks_dir(store_path: str, generation: int) -> str:
     else:
         raise ValueError(f"only generations 0 and -1 are retained, got {generation}")
     return os.path.join(store_path, sub)
-
-
-def _list_chunk_files(chunks_dir: str) -> list[tuple[str, str]]:
-    """(file, hash_prefix) pairs under the generation dir.  The prefix is a
-    DIRECTORY key (written via partitionBy), not a file column."""
-    out: list[tuple[str, str]] = []
-    if not os.path.isdir(chunks_dir):
-        return out
-    for entry in sorted(os.listdir(chunks_dir)):
-        full = os.path.join(chunks_dir, entry)
-        if entry.startswith("hash_prefix=") and os.path.isdir(full):
-            prefix = entry.split("=", 1)[1]
-            for f in sorted(os.listdir(full)):
-                if f.endswith(".parquet"):
-                    out.append((os.path.join(full, f), prefix))
-    return out
 
 
 class PsLakeReader(DataSourceReader):
@@ -165,9 +151,8 @@ class PsLakeReader(DataSourceReader):
                 "pslake source requires a store path: .option('path', <dir>)"
                 " or CREATE TABLE ... USING pslake OPTIONS (path '<dir>')"
             )
-        files = _list_chunk_files(self.chunks_dir)
-        if self.prefix_in is not None:
-            files = [(f, p) for f, p in files if p in self.prefix_in]
+        prefixes = None if self.prefix_in is None else sorted(self.prefix_in)
+        files = _list_chunk_files(self.chunks_dir, prefixes)
         return [_ChunkFilePartition(f, p) for f, p in files]
 
     def read(self, partition: _ChunkFilePartition):
