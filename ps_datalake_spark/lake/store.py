@@ -23,8 +23,10 @@ partitioned append; no driver-side loops over rows. hash_prefix gives 16^n
 balanced partitions (content hashes are uniform). A point read (`get`, `has`)
 runs no Spark job: the driver lists the one hash_prefix directory and reads it
 with pyarrow, and the filter on `hash` skips row groups by min/max stats, so
-its cost follows the size of one partition, not of the store. Batch reads
-(`get_blobs`), puts and maintenance stay distributed.
+its cost follows the size of one partition, not of the store. A batch read
+(`get_blobs`) runs the same reader (`read_blobs`) in one map pass over keys
+repartitioned by hash prefix, so it reads only the partitions its keys touch.
+Puts and maintenance stay distributed.
 """
 
 from __future__ import annotations
@@ -48,7 +50,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..errors import Corrupted, NotFound, StoreBusy, StoreOutOfSpace, StoreReadOnly
+from ..errors import Corrupted, InvalidHkey, NotFound, StoreBusy, StoreOutOfSpace, StoreReadOnly
 from . import crypto
 from .hkey import HASH_RE, Hkey
 
@@ -206,6 +208,93 @@ def _read_files(files: list[str], schema: pa.Schema, columns: list[str], where) 
         raise Corrupted(f"unreadable parquet in {os.path.dirname(files[0])}: {e}") from e
 
 
+def _read_chunks(
+    chunks_dir: str, prefix_len: int, hashes: list[str], columns: list[str]
+) -> pa.Table:
+    """Rows of a chunks generation whose hash is in ``hashes``.
+
+    Lists only the hash_prefix directories of ``hashes``, each once, and the
+    range part of the filter lets row-group min/max stats on ``hash`` skip
+    the rest (pyarrow does not prune on ``isin`` alone)."""
+    prefixes = sorted({h[:prefix_len] for h in hashes})
+    files = [f for f, _ in list_chunk_files(chunks_dir, prefixes)]
+    h = pads.field("hash")
+    where = (h >= min(hashes)) & (h <= max(hashes)) & h.isin(hashes)
+    return _read_files(files, CHUNKS_ARROW_SCHEMA, columns, where)
+
+
+def read_blobs(
+    chunks_dir: str, manifests_dir: str, prefix_len: int, hkeys: list[Hkey]
+) -> list[bytes | None]:
+    """The blob of each decoded hkey, or None where its chunk, tree or a tree
+    child is absent. Needs no SparkSession: ``Store.get`` calls it on the
+    driver, ``Store.get_blobs`` in its Python workers.
+
+    Raw keys decode inline. Tree roots are looked up in the manifests with
+    one read, then every stored chunk the batch needs (plain/enc hashes and
+    tree children) is read with one more, over only its hash_prefix
+    directories. Raises Corrupted on an unreadable file, an AEAD failure or
+    a tree whose length disagrees with its hkey."""
+    roots = sorted({hk.hash for hk in hkeys if hk.kind == "tree"})
+    kids: dict[str, list[tuple[str, str | None, str]]] = {}  # root → (hash, key, cipher)
+    if roots:
+        rows = _read_files(
+            _data_files(manifests_dir),
+            MANIFESTS_ARROW_SCHEMA,
+            ["root_hash", "seq", "child_hash", "child_key", "child_enc"],
+            pads.field("root_hash").isin(roots),
+        )
+        for k in rows.sort_by([("root_hash", "ascending"), ("seq", "ascending")]).to_pylist():
+            key = None if k["child_enc"] == "plain" else k["child_key"]
+            kids.setdefault(k["root_hash"], []).append((k["child_hash"], key, k["child_enc"]))
+    hashes = sorted(
+        {hk.hash for hk in hkeys if hk.kind in ("plain", "enc")}
+        | {kid[0] for ks in kids.values() for kid in ks}
+    )
+    stored: dict[str, tuple[str, bytes]] = {}
+    if hashes:
+        t = _read_chunks(chunks_dir, prefix_len, hashes, ["hash", "enc", "data"])
+        stored = {
+            h: (enc, data)
+            for h, enc, data in zip(*(t.column(c).to_pylist() for c in ("hash", "enc", "data")))
+        }
+
+    def chunk(h: str, key: str | None, cipher: str | None = None) -> bytes | None:
+        """Plaintext of chunk ``h``, None if it is absent: its stored bytes
+        when ``key`` is None, else decrypted under ``cipher``, by default the
+        one stored with the chunk."""
+        row = stored.get(h)
+        if row is None or key is None:
+            return None if row is None else row[1]
+        return crypto.decrypt_as(cipher or row[0], row[1], bytes.fromhex(key))
+
+    out: list[bytes | None] = []
+    for hk in hkeys:
+        if hk.kind == "raw":
+            out.append(hk.inline or b"")
+        elif hk.kind in ("plain", "enc"):
+            out.append(chunk(hk.hash, hk.key))
+        else:  # tree: children in seq order → decrypt → concat (A13 read)
+            parts = [chunk(*kid) for kid in kids.get(hk.hash, [])]
+            if not parts or None in parts:
+                out.append(None)
+                continue
+            blob = b"".join(parts)
+            if len(blob) != hk.size:
+                raise Corrupted(f"tree length mismatch for {hk.hash}: {len(blob)} != {hk.size}")
+            out.append(blob)
+    return out
+
+
+def _decode_or_none(s: str | None) -> Hkey | None:
+    """Hkey.decode for the batch read: a NULL or malformed hkey, or an
+    unknown kind, is None."""
+    try:
+        return Hkey.decode(s) if s is not None else None
+    except InvalidHkey:
+        return None
+
+
 def acquire_write_lease(path: str, op: str):
     """Module-level write-lease protocol (see Store._write_lease for the
     reference mapping).  Context manager; raises StoreBusy when contended.
@@ -324,7 +413,9 @@ class Store:
         # fresh-store query path.  The file lands in the same
         # chunks/hash_prefix=<p>/ directory layout partitionBy produced;
         # every reader supplies CHUNKS_SCHEMA explicitly, so nothing depends
-        # on writer-specific metadata.
+        # on writer-specific metadata.  The file is written under a `_` name,
+        # which every reader skips, and renamed into place, so a torn write is
+        # never read.
         import pyarrow.parquet as pq
 
         part_dir = os.path.join(path, "chunks", f"hash_prefix={h[:prefix_len]}")
@@ -338,9 +429,10 @@ class Store:
             },
             schema=CHUNKS_ARROW_SCHEMA,
         )
-        pq.write_table(
-            table, os.path.join(part_dir, f"part-00000-{uuid.uuid4().hex}.parquet")
-        )
+        name = f"part-00000-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(part_dir, f"_tmp-{name}")
+        pq.write_table(table, tmp)
+        os.rename(tmp, os.path.join(part_dir, name))
         with open(os.path.join(path, "manifest.json"), "w") as f:
             json.dump(manifest, f, indent=2)
         return cls(spark, path, readonly=False, manifest=manifest)
@@ -545,13 +637,13 @@ class Store:
         # compact would otherwise derive `old` from a stale pointer (sweeping
         # the generation concurrent readers hold) and clobber every other
         # pointer that process committed (e.g. manifests_dir) when it dumps
-        # its stale dict back to disk.
+        # its stale dict back to disk. Only an absent manifest.json keeps the
+        # in-memory view (a fresh store mid-create); an unparseable one
+        # raises Corrupted before the swap.
+        on_disk = self._disk_manifest()
+        if on_disk is not None:
+            self.manifest = on_disk
         mf_path = os.path.join(self.path, "manifest.json")
-        try:
-            with open(mf_path) as f:
-                self.manifest = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            pass  # keep the in-memory view (fresh store mid-create)
         old = self.manifest.get(f"{sub}_dir") or sub
         self.manifest[f"{sub}_dir"] = new_dir
         # time-travel pointer: the retained generation stays addressable
@@ -853,189 +945,56 @@ class Store:
 
     # -- read path (A7/A8/A15 analog) ---------------------------------------
 
-    def _read_chunks(self, hashes: list[str], columns: list[str]) -> pa.Table:
-        """Rows of the active chunks generation whose hash is in ``hashes``.
-
-        A driver-side pyarrow read with no Spark job: it lists only the
-        hash_prefix directories of ``hashes``, each once, and the range part
-        of the filter lets row-group min/max stats on ``hash`` skip the rest
-        (for one hash, every row group but the one that can hold it)."""
-        files = [
-            f
-            for f, _ in list_chunk_files(
-                self._active_path("chunks"), sorted({h[: self.prefix_len] for h in hashes})
-            )
-        ]
-        h = pads.field("hash")
-        where = (h >= min(hashes)) & (h <= max(hashes)) & h.isin(hashes)
-        return _read_files(files, CHUNKS_ARROW_SCHEMA, columns, where)
-
-    def _chunk_data(self, hashes: list[str]) -> dict[str, tuple[str, bytes]]:
-        """hash → (enc, stored bytes) for the stored chunks among ``hashes``."""
-        t = self._read_chunks(hashes, ["hash", "enc", "data"])
-        return {
-            h: (enc, data)
-            for h, enc, data in zip(*(t.column(c).to_pylist() for c in ("hash", "enc", "data")))
-        }
-
     def get(self, hkey_str: str) -> bytes:
         """Reconstruct a blob from its hkey: a point read of its hash_prefix
         partition on the driver, with no Spark job. Raises NotFound if the
         chunk or tree is absent, Corrupted if a file in the partition cannot
         be read or a tree's length disagrees with its hkey."""
         hk = Hkey.decode(hkey_str)
-        if hk.kind == "raw":
-            return hk.inline or b""
-        if hk.kind in ("plain", "enc"):
-            row = self._chunk_data([hk.hash]).get(hk.hash)
-            if row is None:
-                raise NotFound(hk.hash)
-            enc, data = row
-            if hk.kind == "plain":
-                return data
-            return crypto.decrypt_as(enc, data, bytes.fromhex(hk.key))
-        # tree: manifest rows → children → decrypt → ordered concat (A13 read)
-        kids = (
-            _read_files(
-                _data_files(self._active_path("manifests")),
-                MANIFESTS_ARROW_SCHEMA,
-                ["seq", "child_hash", "child_key", "child_enc"],
-                pads.field("root_hash") == hk.hash,
-            )
-            .sort_by("seq")
-            .to_pylist()
+        (blob,) = read_blobs(
+            self._active_path("chunks"), self._active_path("manifests"), self.prefix_len, [hk]
         )
-        if not kids:
-            raise NotFound(hk.hash)
-        rows = self._chunk_data([k["child_hash"] for k in kids])
-        parts = []
-        for k in kids:
-            r = rows.get(k["child_hash"])
-            if r is None:
-                raise NotFound(k["child_hash"])
-            data = r[1]
-            if k["child_enc"] != "plain":
-                data = crypto.decrypt_as(k["child_enc"], data, bytes.fromhex(k["child_key"]))
-            parts.append(data)
-        blob = b"".join(parts)
-        if len(blob) != hk.size:
-            raise Corrupted(f"tree length mismatch for {hk.hash}: {len(blob)} != {hk.size}")
+        if blob is None:
+            raise NotFound(hkey_str)
         return blob
 
     def has(self, hash_hex: str) -> bool:
         if not HASH_RE.fullmatch(hash_hex):
             return False  # not a chunk address, and never a directory name
-        return self._read_chunks([hash_hex], ["hash"]).num_rows > 0
+        chunks_dir = self._active_path("chunks")
+        return _read_chunks(chunks_dir, self.prefix_len, [hash_hex], ["hash"]).num_rows > 0
 
     def get_blobs(self, hkeys: DataFrame, id_col: str = "id", hkey_col: str = "hkey") -> DataFrame:
-        """Distributed batch get: (id, hkey) → (id, data).
+        """Distributed batch get: (id, hkey) → (id, data), one row per input row.
 
-        raw hkeys decode inline (JVM-side unbase64); plain/enc join the chunk
-        table on hash (partition-pruned by the join's hash keys at scale) and
-        decrypt in Arrow batches; tree hkeys join manifests → children →
-        ordered binary concat. Missing hashes surface as NULL data (batch
-        semantics — the point-read path raises NotFound instead).
-        """
+        The rows are repartitioned on the first ``prefix_len`` digits of the
+        hkey's hash, so each task reads only the hash_prefix directories its
+        own keys touch, with :func:`read_blobs` — the reader ``get`` uses.
+        Only the key strings are shuffled. A missing chunk, tree or tree
+        child, a malformed hkey or an unknown kind gives NULL data (the point
+        read raises NotFound or InvalidHkey instead). Damage (an unreadable
+        file, an AEAD failure, a tree length mismatch) raises Corrupted and
+        fails the job."""
         src = hkeys.select(F.col(id_col).alias("id"), F.col(hkey_col).alias("hkey"))
-        parts = F.split(F.col("hkey"), ":")
-        parsed = src.select(
-            "id", parts.getItem(0).alias("kind"), parts.alias("p"), "hkey"
-        )
+        chunks_dir = self._active_path("chunks")
+        manifests_dir = self._active_path("manifests")
+        prefix_len = self.prefix_len
 
-        out_parts: list[DataFrame] = []
-        raw = parsed.where(F.col("kind") == "raw").select(
-            "id", F.unbase64(F.translate(F.col("p").getItem(1), "-_", "+/")).alias("data")
-        )
-        out_parts.append(raw)
-
-        chunk_data = self.chunks().select(
-            F.col("hash"), F.col("enc"), F.col("data").alias("stored")
-        )
-
-        def _decrypt_batch(batches):
+        def _read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                datas = []
-                for stored, enc, key in zip(pdf["stored"], pdf["enc"], pdf["key"]):
-                    if stored is None:
-                        datas.append(None)
-                    elif enc == "plain" or key is None:
-                        datas.append(bytes(stored))
-                    else:
-                        datas.append(crypto.decrypt_as(enc, bytes(stored), bytes.fromhex(key)))
-                yield pd.DataFrame({"id": pdf["id"], "data": datas})
+                decoded = [_decode_or_none(s) for s in pdf["hkey"]]
+                blobs = iter(
+                    read_blobs(
+                        chunks_dir, manifests_dir, prefix_len, [hk for hk in decoded if hk]
+                    )
+                )
+                data = [next(blobs) if hk else None for hk in decoded]
+                yield pd.DataFrame({"id": pdf["id"], "data": data})
 
-        single = (
-            parsed.where(F.col("kind").isin("plain", "enc"))
-            .select(
-                "id",
-                F.col("p").getItem(1).alias("hash"),
-                F.when(F.col("kind") == "enc", F.col("p").getItem(2)).alias("key"),
-            )
-            .join(chunk_data, "hash", "left")
-            .select("id", "stored", "enc", "key")
-        )
-        out_parts.append(single.mapInPandas(_decrypt_batch, "id long, data binary"))
-
-        trees = parsed.where(F.col("kind") == "tree").select(
-            "id", F.col("p").getItem(1).alias("root_hash")
-        )
-        kids = (
-            trees.join(self.manifests(), "root_hash")  # missing roots → NULL via final left join
-            .join(
-                chunk_data.withColumnRenamed("hash", "child_hash"),
-                "child_hash",
-                "left",
-            )
-            .select(
-                "id",
-                "seq",
-                "stored",
-                F.col("child_enc").alias("enc"),
-                F.col("child_key").alias("key"),
-            )
-        )
-        kid_plain = kids.mapInPandas(
-            lambda batches: (
-                pdf.assign(
-                    data=[
-                        None
-                        if stored is None
-                        else (
-                            bytes(stored)
-                            if enc == "plain" or key is None
-                            else crypto.decrypt_as(enc, bytes(stored), bytes.fromhex(key))
-                        )
-                        for stored, enc, key in zip(pdf["stored"], pdf["enc"], pdf["key"])
-                    ]
-                )[["id", "seq", "data"]]
-                for pdf in batches
-            ),
-            "id long, seq int, data binary",
-        )
-        def _assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-            # linear reassembly: sort by seq and b''.join once.  The previous
-            # F.aggregate(concat) fold rebuilt the accumulator per child —
-            # O(n²) bytes copied per blob, terabytes of memory traffic for a
-            # GB-scale tree; join is one pass, matching the point-read path.
-            pdf = pdf.sort_values("seq")
-            if pdf["data"].isna().any():
-                data = None  # a missing child poisons the blob (batch contract)
-            else:
-                data = b"".join(bytes(x) for x in pdf["data"])
-            return pd.DataFrame({"id": [int(pdf["id"].iloc[0])], "data": [data]})
-
-        assembled = kid_plain.groupBy("id").applyInPandas(
-            _assemble, "id long, data binary"
-        )
-        out_parts.append(assembled)
-
-        result = out_parts[0]
-        for p in out_parts[1:]:
-            result = result.unionByName(p)
-        # contract: EVERY input id appears exactly once; tree hkeys with no
-        # manifest rows (and unknown kinds) must surface as NULL data, not
-        # disappear from the output
-        return src.select("id").join(result, "id", "left")
+        out_schema = StructType([src.schema["id"], StructField("data", BinaryType(), True)])
+        return src.repartition(
+            F.substring(F.split("hkey", ":").getItem(1), 1, prefix_len)
+        ).mapInPandas(_read, out_schema)
 
     # -- maintenance (the file ops a 100 TB lake needs) ----------------------
 

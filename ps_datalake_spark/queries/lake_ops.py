@@ -23,10 +23,9 @@ from pyspark.sql import functions as F
 
 from ..errors import Corrupted
 from ..lake import Lake, Store
+from ..lake.store import MAX_SIZE_RAW
 from ..registry import query
 from ._util import T, scratch_dir
-
-_RAW_MAX = 128  # keep in sync with lake.store.MAX_SIZE_RAW
 
 
 def _fresh_store(spark: SparkSession, name: str) -> Store:
@@ -65,9 +64,9 @@ def _doc_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "b38_put_dedup",
     oracle=f"""
     SELECT count(*) AS n_blobs,
-           CAST(sum(CASE WHEN octet_length(encode(text)) <= {_RAW_MAX} THEN 1 ELSE 0 END)
+           CAST(sum(CASE WHEN octet_length(encode(text)) <= {MAX_SIZE_RAW} THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_raw,
-           CAST(count(DISTINCT CASE WHEN octet_length(encode(text)) > {_RAW_MAX}
+           CAST(count(DISTINCT CASE WHEN octet_length(encode(text)) > {MAX_SIZE_RAW}
                 THEN sha256(text) END) + 1 AS BIGINT) AS n_chunk_rows
     FROM documents
     """,
@@ -113,7 +112,7 @@ def b38_put_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "b38_content_addressing",
     oracle=f"""
-    SELECT CAST(count(DISTINCT CASE WHEN octet_length(encode(text)) > {_RAW_MAX}
+    SELECT CAST(count(DISTINCT CASE WHEN octet_length(encode(text)) > {MAX_SIZE_RAW}
                 THEN sha256(text) END) + 1 AS BIGINT) AS n_chunks,
            0 AS hash_violations
     FROM documents
@@ -139,10 +138,10 @@ def b38_content_addressing(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH d AS (SELECT doc_id, sha256(text) AS h, octet_length(encode(text)) AS n
                FROM documents)
-    SELECT CAST((SELECT count(DISTINCT h) FROM d WHERE n > {_RAW_MAX} AND doc_id < 250) + 1
+    SELECT CAST((SELECT count(DISTINCT h) FROM d WHERE n > {MAX_SIZE_RAW} AND doc_id < 250) + 1
                 AS BIGINT) AS from_primary,
-           CAST((SELECT count(DISTINCT h) FROM d WHERE n > {_RAW_MAX} AND doc_id >= 250
-                 AND h NOT IN (SELECT h FROM d WHERE n > {_RAW_MAX} AND doc_id < 250))
+           CAST((SELECT count(DISTINCT h) FROM d WHERE n > {MAX_SIZE_RAW} AND doc_id >= 250
+                 AND h NOT IN (SELECT h FROM d WHERE n > {MAX_SIZE_RAW} AND doc_id < 250))
                 AS BIGINT) AS from_secondary
     FROM (SELECT 1)
     """,
@@ -204,9 +203,9 @@ def b38_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH d AS (SELECT doc_id, sha256(text) AS h, octet_length(encode(text)) AS n
                FROM documents)
-    SELECT CAST((SELECT count(DISTINCT h) FROM d WHERE n > {_RAW_MAX} AND doc_id < 250) + 1
+    SELECT CAST((SELECT count(DISTINCT h) FROM d WHERE n > {MAX_SIZE_RAW} AND doc_id < 250) + 1
                 AS BIGINT) AS a_chunks,
-           CAST((SELECT count(DISTINCT h) FROM d WHERE n > {_RAW_MAX}) + 1 AS BIGINT)
+           CAST((SELECT count(DISTINCT h) FROM d WHERE n > {MAX_SIZE_RAW}) + 1 AS BIGINT)
              AS b_chunks,
            CAST(1 AS BIGINT) AS routed_to_b,
            CAST(1 AS BIGINT) AS out_of_stores
@@ -227,10 +226,10 @@ def b38_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     blobs = _doc_blobs(spark, sf_dir).withColumn("_n", F.length("data"))
     sums = blobs.agg(
         F.coalesce(
-            F.sum(F.when((F.col("_n") > _RAW_MAX) & (F.col("id") < 250), F.col("_n"))),
+            F.sum(F.when((F.col("_n") > MAX_SIZE_RAW) & (F.col("id") < 250), F.col("_n"))),
             F.lit(0),
         ).alias("s1"),
-        F.coalesce(F.sum(F.when(F.col("_n") > _RAW_MAX, F.col("_n"))), F.lit(0)).alias(
+        F.coalesce(F.sum(F.when(F.col("_n") > MAX_SIZE_RAW, F.col("_n"))), F.lit(0)).alias(
             "sall"
         ),
     ).head()
@@ -261,7 +260,7 @@ def b38_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # blob is as big as all storable docs combined, so no dedup slack in
     # either store can admit it)
     big = spark.createDataFrame(
-        [(0, bytearray(b"\xab" * max(sall, _RAW_MAX + 1)))], "id long, data binary"
+        [(0, bytearray(b"\xab" * max(sall, MAX_SIZE_RAW + 1)))], "id long, data binary"
     )
     try:
         lake.put_blobs(big).count()
@@ -284,9 +283,9 @@ def b38_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH d AS (SELECT doc_id, sha256(text) AS h, octet_length(encode(text)) AS n
                FROM documents)
-    SELECT CAST((SELECT count(DISTINCT h) FROM d WHERE n > {_RAW_MAX}) + 1 AS BIGINT)
+    SELECT CAST((SELECT count(DISTINCT h) FROM d WHERE n > {MAX_SIZE_RAW}) + 1 AS BIGINT)
              AS n_chunks_after_compact,
-           CAST((SELECT count(DISTINCT h) FROM d WHERE n > {_RAW_MAX} AND doc_id % 2 = 0) + 1
+           CAST((SELECT count(DISTINCT h) FROM d WHERE n > {MAX_SIZE_RAW} AND doc_id % 2 = 0) + 1
                 AS BIGINT) AS n_chunks_after_vacuum,
            true AS roundtrip_ok
     FROM (SELECT 1)
@@ -330,7 +329,7 @@ def b38_compact_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "b38_stream_ingest",
     oracle=f"""
-    SELECT CAST(count(DISTINCT CASE WHEN octet_length(encode(text)) > {_RAW_MAX}
+    SELECT CAST(count(DISTINCT CASE WHEN octet_length(encode(text)) > {MAX_SIZE_RAW}
                 THEN sha256(text) END) + 1 AS BIGINT) AS n_chunks,
            CAST(count(*) AS BIGINT) AS n_ingested
     FROM documents
@@ -395,9 +394,9 @@ def b38_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH d AS (SELECT doc_id, sha256(text) AS h, octet_length(encode(text)) AS n
                FROM documents)
-    SELECT CAST((SELECT count(DISTINCT h) FROM d WHERE n > {_RAW_MAX}
+    SELECT CAST((SELECT count(DISTINCT h) FROM d WHERE n > {MAX_SIZE_RAW}
                  AND doc_id % 2 = 0) + 1 AS BIGINT) AS n_current,
-           CAST((SELECT count(DISTINCT h) FROM d WHERE n > {_RAW_MAX}) + 1
+           CAST((SELECT count(DISTINCT h) FROM d WHERE n > {MAX_SIZE_RAW}) + 1
                 AS BIGINT) AS n_snapshot,
            true AS vacuumed_chunk_in_snapshot,
            false AS vacuumed_chunk_in_current
@@ -457,7 +456,7 @@ def b38_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Sentinel chunk's recorded plaintext size: len(SENTINEL) + inline_max
 # (Store.create writes SENTINEL + zero padding to inline_max; see
 # lake/store.py create()).  Keep in sync with lake.store.
-_SENTINEL_PLAIN_SIZE = 30 + _RAW_MAX
+_SENTINEL_PLAIN_SIZE = 30 + MAX_SIZE_RAW
 
 
 @query(
@@ -465,7 +464,7 @@ _SENTINEL_PLAIN_SIZE = 30 + _RAW_MAX
     oracle=f"""
     WITH d AS (
       SELECT DISTINCT sha256(text) AS h, octet_length(encode(text)) AS n
-      FROM documents WHERE octet_length(encode(text)) > {_RAW_MAX}
+      FROM documents WHERE octet_length(encode(text)) > {MAX_SIZE_RAW}
     )
     SELECT CAST(count(*) + 1 AS BIGINT) AS n_chunks,
            CAST(sum(n) + {_SENTINEL_PLAIN_SIZE} AS BIGINT) AS plain_bytes,
@@ -511,7 +510,7 @@ def b78_pslake_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH d AS (
       SELECT DISTINCT sha256(text) AS h, octet_length(encode(text)) AS n
-      FROM documents WHERE octet_length(encode(text)) > {_RAW_MAX}
+      FROM documents WHERE octet_length(encode(text)) > {MAX_SIZE_RAW}
     )
     SELECT CAST(count(*) + 1 AS BIGINT) AS n_chunks,
            CAST(sum(n) + {_SENTINEL_PLAIN_SIZE} AS BIGINT) AS plain_bytes
@@ -549,7 +548,7 @@ def b78_pslake_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH d AS (
       SELECT DISTINCT sha256(text) AS h, octet_length(encode(text)) AS n
-      FROM documents WHERE octet_length(encode(text)) > {_RAW_MAX}
+      FROM documents WHERE octet_length(encode(text)) > {MAX_SIZE_RAW}
     )
     SELECT CAST(count(*) + 1 AS BIGINT) AS n_chunks,
            CAST(sum(n) + {_SENTINEL_PLAIN_SIZE} AS BIGINT) AS plain_bytes,
@@ -603,7 +602,7 @@ def b78_pslake_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(1 AS BIGINT) AS verified
     FROM documents
     WHERE doc_id = (SELECT min(doc_id) FROM documents
-                    WHERE octet_length(encode(text)) > {_RAW_MAX})
+                    WHERE octet_length(encode(text)) > {MAX_SIZE_RAW})
     """,
     tags=("B38", "lake"),
     doc="A7 point lookup AT THE SOURCE-PLANNING LAYER (Spark 4.1 "
@@ -626,7 +625,7 @@ def b78_pslake_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_pslake(spark)
     target_id = (
         T(spark, sf_dir, "documents")
-        .where(F.length(F.col("text").cast("binary")) > _RAW_MAX)
+        .where(F.length(F.col("text").cast("binary")) > MAX_SIZE_RAW)
         .agg(F.min("doc_id").alias("m"))
         .head()["m"]
     )
@@ -650,12 +649,12 @@ def b78_pslake_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH d AS (
       SELECT DISTINCT sha256(text) AS h, octet_length(encode(text)) AS n
-      FROM documents WHERE octet_length(encode(text)) > {_RAW_MAX}
+      FROM documents WHERE octet_length(encode(text)) > {MAX_SIZE_RAW}
     ),
     t AS (
       SELECT octet_length(encode(text)) AS n FROM documents
       WHERE doc_id = (SELECT min(doc_id) FROM documents
-                      WHERE octet_length(encode(text)) > {_RAW_MAX})
+                      WHERE octet_length(encode(text)) > {MAX_SIZE_RAW})
     )
     SELECT CAST(count(*) + 1 AS BIGINT) AS n_chunks,
            CAST(sum(n) + {_SENTINEL_PLAIN_SIZE} AS BIGINT) AS plain_bytes,
@@ -689,7 +688,7 @@ def b78_pslake_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     hkeys = store.put_blobs(_doc_blobs(spark, sf_dir))
     target_id = (
         T(spark, sf_dir, "documents")
-        .where(F.length(F.col("text").cast("binary")) > _RAW_MAX)
+        .where(F.length(F.col("text").cast("binary")) > MAX_SIZE_RAW)
         .agg(F.min("doc_id").alias("m"))
         .head()["m"]
     )
@@ -723,7 +722,7 @@ def b78_pslake_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH d AS (
       SELECT DISTINCT sha256(text) AS h, octet_length(encode(text)) AS n
-      FROM documents WHERE octet_length(encode(text)) > {_RAW_MAX}
+      FROM documents WHERE octet_length(encode(text)) > {MAX_SIZE_RAW}
     )
     SELECT CAST(count(*) + 1 AS BIGINT) AS n_chunks,
            CAST(sum(n) + {_SENTINEL_PLAIN_SIZE} AS BIGINT) AS plain_bytes,

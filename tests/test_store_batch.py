@@ -180,3 +180,153 @@ def test_put_blobs_null_payload_raises(spark, tmp_path):
         store.put_blobs(df)
     # nothing must have been stored besides the create-time sentinel
     assert store.chunks().count() == 1
+
+
+# -- get_blobs: the point reader in one map pass -----------------------------
+
+
+def _plain_chunk(store, data: bytes) -> str:
+    """Store ``data`` unencrypted, as the A12 fallback does, and return its
+    hkey. Neither cipher expands a ciphertext past the AEAD allowance, so no
+    put produces a plain chunk; this writes the chunk's file with pyarrow."""
+    import hashlib
+    import os
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ps_datalake_spark.lake.store import CHUNKS_ARROW_SCHEMA
+
+    h = hashlib.sha256(data).hexdigest()
+    part = os.path.join(store._active_path("chunks"), f"hash_prefix={h[: store.prefix_len]}")
+    os.makedirs(part, exist_ok=True)
+    row = {"hash": [h], "size": [len(data)], "enc": ["plain"], "data": [data]}
+    pq.write_table(
+        pa.table(row, schema=CHUNKS_ARROW_SCHEMA),
+        os.path.join(part, f"part-00000-{uuid.uuid4().hex}.parquet"),
+    )
+    return f"plain:{h}:{len(data)}"
+
+
+def _put_mixed(spark, store, salt: int = 0) -> dict[str, tuple[str, bytes]]:
+    """name → (hkey, blob): a raw blob, ten enc blobs spread over the
+    prefixes, and a tree."""
+    sizes = {"raw": 60 + salt, "tree": MAX_DECRYPTED_SIZE + 5000 + salt}
+    sizes.update({f"enc{i}": 300 + 97 * i + salt for i in range(10)})
+    blobs = {k: _blob(n) for k, n in sizes.items()}
+    names = list(blobs)
+    df = spark.createDataFrame(
+        [(i, bytearray(blobs[k])) for i, k in enumerate(names)], "id long, data binary"
+    )
+    hkeys = {r["id"]: r["hkey"] for r in store.put_blobs(df).collect()}
+    return {k: (hkeys[i], blobs[k]) for i, k in enumerate(names)}
+
+
+def _read_back(store, hkeys: list[str]) -> list:
+    df = store.spark.createDataFrame(list(enumerate(hkeys)), "id long, hkey string")
+    rows = store.get_blobs(df).collect()
+    assert sorted(r["id"] for r in rows) == list(range(len(hkeys))), "one row per id"
+    got = {r["id"]: r["data"] for r in rows}
+    return [None if got[i] is None else bytes(got[i]) for i in range(len(hkeys))]
+
+
+def test_get_blobs_mixed_batch_in_at_most_two_jobs(spark, tmp_path):
+    from ps_datalake_spark.lake import Hkey
+
+    from .test_point_read import _jobs
+
+    store = Store.create(spark, str(tmp_path / "mixed"), prefix_len=1)
+    stored = _put_mixed(spark, store)
+    plain = _blob(777)
+    stored["plain"] = (_plain_chunk(store, plain), plain)
+    prefixes = {Hkey.decode(hk).hash[:1] for hk, _ in stored.values() if not hk.startswith("raw:")}
+    assert len(prefixes) >= 4, "the batch must span several prefixes"
+    misses = [
+        "enc:" + "ab" * 32 + ":" + "cd" * 32 + ":500",  # unknown hash
+        "plain:" + "ef" * 32 + ":9",
+        "tree:" + "0" * 64 + ":123",  # missing tree root
+        "enc:../..:x:1",  # malformed
+        "zzz:1",  # unknown kind
+        None,
+    ]
+    hkeys = [hk for hk, _ in stored.values()] + misses
+    out = {}
+    assert _jobs(spark, lambda: out.update(got=_read_back(store, hkeys))) <= 2
+    assert out["got"] == [b for _, b in stored.values()] + [None] * len(misses)
+
+
+def test_get_blobs_after_compact_and_vacuum(spark, tmp_path):
+    store = Store.create(spark, str(tmp_path / "gens"), prefix_len=1)
+    first = _put_mixed(spark, store, salt=1)
+    second = _put_mixed(spark, store, salt=2)
+    both = [*first.values(), *second.values()]
+    store.compact(target_file_bytes=1 << 20)
+    assert _read_back(store, [hk for hk, _ in both]) == [b for _, b in both]
+    roots = spark.createDataFrame([(hk,) for hk, _ in first.values()], "hkey string")
+    assert store.vacuum(roots) > 0
+    # raw keys store nothing, so they always read; every other dropped key is NULL
+    want = [b for _, b in first.values()] + [
+        b if hk.startswith("raw:") else None for hk, b in second.values()
+    ]
+    assert _read_back(store, [hk for hk, _ in both]) == want
+
+
+def test_get_blobs_tree_length_mismatch_is_corrupted(spark, tmp_path):
+    import pytest
+
+    from ps_datalake_spark.errors import Corrupted
+
+    store = Store.create(spark, str(tmp_path / "tree_len"), prefix_len=1)
+    hk, blob = _put_mixed(spark, store)["tree"]
+    kind, root, size = hk.split(":")
+    lying = f"{kind}:{root}:{int(size) + 1}"
+    with pytest.raises(Corrupted):
+        store.get(lying)
+    with pytest.raises(Exception, match="Corrupted"):
+        _read_back(store, [hk, lying])
+    assert _read_back(store, [hk]) == [blob]
+
+
+def test_commit_generation_refuses_damaged_manifest(spark, tmp_path):
+    import os
+
+    import pytest
+
+    from ps_datalake_spark.errors import Corrupted
+
+    store = Store.create(spark, str(tmp_path / "mf_commit"), prefix_len=1)
+    mf = os.path.join(store.path, "manifest.json")
+    with open(mf, "w") as f:
+        f.write('{"magic": "datalake/v1", "chunks_dir": ')
+    with open(mf, "rb") as f:
+        damaged = f.read()
+    with pytest.raises(Corrupted):
+        store.compact()
+    with pytest.raises(Corrupted):
+        store._commit_generation("chunks", "chunks_g00000000")
+    with open(mf, "rb") as f:
+        assert f.read() == damaged, "no pointer swap over a damaged manifest"
+
+
+def test_stray_temporary_file_is_never_read(spark, tmp_path):
+    """The sentinel is written under a `_tmp-` name and renamed into place;
+    a torn temporary file left by a crash must not reach any reader."""
+    import glob
+    import os
+
+    store = Store.create(spark, str(tmp_path / "torn"), prefix_len=1)
+    chunks = store._active_path("chunks")
+    assert not glob.glob(os.path.join(chunks, "*", "_tmp-*")), "the rename leaves no temporary"
+    stored = _put_mixed(spark, store)
+    n = store.chunks().count()
+    victim = glob.glob(os.path.join(chunks, "hash_prefix=*", "*.parquet"))[0]
+    with open(victim, "rb") as f:
+        head = f.read(os.path.getsize(victim) // 2)
+    for part in glob.glob(os.path.join(chunks, "hash_prefix=*")):
+        with open(os.path.join(part, "_tmp-part-00000-torn.parquet"), "wb") as f:
+            f.write(head)
+    for hk, blob in stored.values():
+        assert store.get(hk) == blob
+    assert _read_back(store, [hk for hk, _ in stored.values()]) == [b for _, b in stored.values()]
+    assert store.chunks().count() == n
