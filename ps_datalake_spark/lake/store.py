@@ -12,25 +12,29 @@ reference ↔ Spark mapping (SURVEY.md §1.4):
                                            + dataset schema assertion
   sentinel page 0 (store/mod.rs:231-235) → sentinel chunk written at create
 
-Size routing (A11–A14, store/mod.rs:399-436):
+Size routing (A11–A14, store/mod.rs:399-436), all in `route_blob`:
   ≤ MAX_SIZE_RAW        → inline raw hkey, nothing stored
   ≤ MAX_DECRYPTED_SIZE  → convergent-encrypt, store under sha256(ciphertext)
   else                  → split into TREE_CHUNK_SIZE chunks → child puts +
                           manifests rows keyed by sha256(plaintext)
 
-Scale notes: every put is one anti-join (dedup, A10's probe-then-write) + one
-partitioned append; no driver-side loops over rows. hash_prefix gives 16^n
-balanced partitions (content hashes are uniform). A point read (`get`, `has`)
-runs no Spark job: the driver lists the one hash_prefix directory and reads it
-with pyarrow, and the filter on `hash` skips row groups by min/max stats, so
-its cost follows the size of one partition, not of the store. A batch read
-(`get_blobs`) runs the same reader (`read_blobs`) in one map pass over keys
-repartitioned by hash prefix, so it reads only the partitions its keys touch.
-Puts and maintenance stay distributed.
+Scale notes: every put is one map pass that routes each blob with
+`route_blob` (the `pslake` sink calls the same function per blob), one
+aggregate over the routed rows, one anti-join (dedup, A10's
+probe-then-write) and one partitioned append; no driver-side loops over rows.
+hash_prefix gives 16^n balanced partitions (content hashes are uniform). A
+point read (`get`, `has`) runs no Spark job: the driver lists the one
+hash_prefix directory and reads it with pyarrow, and the filter on `hash`
+skips row groups by min/max stats, so its cost follows the size of one
+partition, not of the store. A batch read (`get_blobs`) runs the same reader
+(`read_blobs`) in one map pass over keys repartitioned by hash prefix, so it
+reads only the partitions its keys touch. Puts and maintenance stay
+distributed.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 from typing import Iterator
@@ -107,61 +111,79 @@ MANIFESTS_ARROW_SCHEMA = pa.schema(
     ]
 )
 
-_ENC_RESULT_SCHEMA = (
-    "id long, hash string, size long, enc string, data binary, key string, kind string"
+_ROUTED_SCHEMA = (
+    "id long, hkey string, hash string, size long, enc string, data binary, key string, seq int"
 )
+_ROUTED_COLUMNS = [c.split()[0] for c in _ROUTED_SCHEMA.split(", ")]
 
 
-def _encrypt_batches_for(cname: str):
-    """mapInPandas worker factory: convergent-encrypt payloads under the
-    STORE's manifest-recorded cipher (not the ambient environment's pick),
-    with the A12 guard (store plaintext if the ciphertext expands beyond the
-    AEAD allowance).  Writing with the environment default would break
-    convergent dedup the moment the environment's cipher changes: the same
-    plaintext would produce a different ciphertext and hence a different
-    chunk hash."""
+def _seal(cipher: str, plain: bytes, seq: int | None = None) -> tuple:
+    """One stored chunk of ``plain``: (hash, size, enc, data, key, seq).
 
-    def _encrypt_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    Convergent-encrypts under ``cipher``, the store's manifest-recorded
+    cipher, not the environment's pick: with the environment's default the
+    same plaintext would hash differently once that default changes, and
+    convergent dedup would break. The A12 guard stores the plaintext when
+    the ciphertext expands beyond the AEAD allowance. ``hash`` is sha256 of
+    the stored bytes and ``key`` is None for a plain chunk."""
+    key = crypto.convergent_key(plain)
+    stored = crypto.encrypt_as(cipher, plain, key)
+    if len(stored) > len(plain) + _AEAD_OVERHEAD:
+        stored, enc, key_hex = plain, "plain", None
+    else:
+        enc, key_hex = cipher, key.hex()
+    return hashlib.sha256(stored).hexdigest(), len(plain), enc, stored, key_hex, seq
 
+
+def route_blob(plain: bytes, cipher: str, inline_max: int) -> tuple[str, list[tuple]]:
+    """The put's size routing (A11–A14, store/mod.rs:399-436): a blob's hkey
+    and the chunks to store, each as :func:`_seal` returns it. Every put
+    path calls it: ``Store.put_blobs`` in its map pass and the ``pslake``
+    sink per blob, so both write the same bytes by construction.
+
+    A blob of at most ``inline_max`` bytes is a raw hkey with no chunk; one
+    of at most MAX_DECRYPTED_SIZE is one chunk; a larger one is a tree of
+    TREE_CHUNK_SIZE children whose ``seq`` numbers their order, rooted at
+    sha256(plaintext)."""
+    if len(plain) <= inline_max:
+        return Hkey("raw", inline=plain).encode(), []
+    if len(plain) <= MAX_DECRYPTED_SIZE:
+        chunk = _seal(cipher, plain)
+        kind = "plain" if chunk[2] == "plain" else "enc"
+        return Hkey(kind, hash=chunk[0], key=chunk[4], size=len(plain)).encode(), [chunk]
+    kids = [
+        _seal(cipher, plain[off : off + TREE_CHUNK_SIZE], seq)
+        for seq, off in enumerate(range(0, len(plain), TREE_CHUNK_SIZE))
+    ]
+    root = hashlib.sha256(plain).hexdigest()
+    return Hkey("tree", hash=root, size=len(plain)).encode(), kids
+
+
+def _sentinel(cipher: str, inline_max: int) -> tuple:
+    """The sentinel chunk, the reference's reserved page 0
+    (store/mod.rs:231-235). Sealed directly rather than routed: with
+    ``inline_max`` close to MAX_DECRYPTED_SIZE the router would make it a
+    tree."""
+    return _seal(cipher, SENTINEL + b"\0" * inline_max)
+
+
+def _route_batches_for(cipher: str, inline_max: int):
+    """mapInPandas worker factory: :func:`route_blob` over (id, data) rows.
+    Emits one row per stored chunk, one chunk-less row per raw blob, and a
+    row with a NULL hkey for a NULL payload, which the put refuses."""
+
+    def _route_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = {"id": [], "hash": [], "size": [], "enc": [], "data": [], "key": [], "kind": []}
+            rows = []
             for blob_id, payload in zip(pdf["id"], pdf["data"]):
-                plain = bytes(payload)
-                key = crypto.convergent_key(plain)
-                cipher = crypto.encrypt_as(cname, plain, key)
-                if len(cipher) > len(plain) + _AEAD_OVERHEAD:
-                    stored, enc, key_hex, kind = plain, "plain", None, "plain"
-                else:
-                    stored, enc, key_hex, kind = cipher, cname, key.hex(), "enc"
-                out["id"].append(blob_id)
-                out["hash"].append(hashlib.sha256(stored).hexdigest())
-                out["size"].append(len(plain))
-                out["enc"].append(enc)
-                out["data"].append(stored)
-                out["key"].append(key_hex)
-                out["kind"].append(kind)
-            yield pd.DataFrame(out)
+                if payload is None:
+                    rows.append((blob_id, None) + (None,) * 6)
+                    continue
+                hkey, chunks = route_blob(bytes(payload), cipher, inline_max)
+                rows.extend((blob_id, hkey) + c for c in chunks or [(None,) * 6])
+            yield pd.DataFrame(rows, columns=_ROUTED_COLUMNS)
 
-    return _encrypt_batches
-
-
-def _split_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: split oversized blobs into tree chunks."""
-    import hashlib
-
-    for pdf in batches:
-        out = {"id": [], "root_hash": [], "root_size": [], "seq": [], "data": []}
-        for blob_id, payload in zip(pdf["id"], pdf["data"]):
-            plain = bytes(payload)
-            root = hashlib.sha256(plain).hexdigest()
-            for seq, off in enumerate(range(0, len(plain), TREE_CHUNK_SIZE)):
-                out["id"].append(blob_id)
-                out["root_hash"].append(root)
-                out["root_size"].append(len(plain))
-                out["seq"].append(seq)
-                out["data"].append(plain[off : off + TREE_CHUNK_SIZE])
-        yield pd.DataFrame(out)
+    return _route_batches
 
 
 def _data_files(d: str) -> list[str]:
@@ -390,43 +412,26 @@ class Store:
             "quota_bytes": quota_bytes,
             "inline_max": inline_max,
         }
-        # sentinel chunk ↔ reference's reserved page 0 (store/mod.rs:231-235);
-        # written directly (driver-side encrypt) — no distributed pipeline for
-        # one 158-byte row.  WRITE ORDER IS THE CRASH DISCIPLINE: the sentinel
-        # data lands BEFORE manifest.json is published, mirroring the
-        # reference's publish-index-slot-last rule (store/mod.rs:348-362) — a
-        # create() interrupted between the two steps leaves a directory that
-        # sniff() rejects (no magic), so the next caller recreates it instead
-        # of reusing a sentinel-less store (caught by the 10x robustness
-        # sweep: a crashed create left a sniffable store whose chunk count
-        # was forever one short).
-        import hashlib
+        # The sentinel is written directly with pyarrow, not by a Spark job,
+        # into the chunks/hash_prefix=<p>/ layout partitionBy produces; every
+        # reader supplies the schema, so nothing depends on writer metadata.
+        # WRITE ORDER IS THE CRASH DISCIPLINE: the sentinel lands BEFORE
+        # manifest.json is published, mirroring the reference's
+        # publish-index-slot-last rule (store/mod.rs:348-362) — a create()
+        # interrupted between the two steps leaves a directory that sniff()
+        # rejects (no magic), so the next caller recreates it instead of
+        # reusing a sentinel-less store. The file is written under a `_`
+        # name, which every reader skips, and renamed into place, so a torn
+        # write is never read.
         import uuid
 
-        plain = SENTINEL + b"\0" * inline_max
-        key = crypto.convergent_key(plain)
-        cipher = crypto.encrypt_as(manifest["cipher"], plain, key)
-        h = hashlib.sha256(cipher).hexdigest()
-        # Direct pyarrow write of the one-row sentinel (r13, guide §5): a
-        # distributed write job for 158 bytes is pure job-launch overhead —
-        # one full Spark job per Store.create, paid per run by every
-        # fresh-store query path.  The file lands in the same
-        # chunks/hash_prefix=<p>/ directory layout partitionBy produced;
-        # every reader supplies CHUNKS_SCHEMA explicitly, so nothing depends
-        # on writer-specific metadata.  The file is written under a `_` name,
-        # which every reader skips, and renamed into place, so a torn write is
-        # never read.
         import pyarrow.parquet as pq
 
+        h, size, enc, data, _key, _seq = _sentinel(manifest["cipher"], inline_max)
         part_dir = os.path.join(path, "chunks", f"hash_prefix={h[:prefix_len]}")
         os.makedirs(part_dir, exist_ok=True)
         table = pa.table(
-            {
-                "hash": [h],
-                "size": [len(plain)],
-                "enc": [manifest["cipher"]],
-                "data": [cipher],
-            },
+            {"hash": [h], "size": [size], "enc": [enc], "data": [data]},
             schema=CHUNKS_ARROW_SCHEMA,
         )
         name = f"part-00000-{uuid.uuid4().hex}.parquet"
@@ -716,199 +721,70 @@ class Store:
     def put_blobs(self, df: DataFrame, id_col: str = "id", data_col: str = "data") -> DataFrame:
         """Distributed size-routed put. Returns (id, hkey) DataFrame.
 
-        Pipeline: route by size → encrypt (Arrow batches) / split+encrypt →
-        anti-join against existing hashes (the A7 probe) → partitioned append
-        (the A10 publish) → hkey assembly. Content addressing makes the whole
-        thing idempotent.
+        Pipeline: one map pass routes and encrypts every blob with
+        :func:`route_blob` (Arrow batches) and is persisted → one aggregate
+        over the routed rows (NULL guard, quota) → anti-join against existing
+        hashes (the A7 probe) → partitioned append (the A10 publish) → the
+        hkeys, a filter of the routed rows. Content addressing makes the
+        whole thing idempotent.
         """
         if self.readonly:
             raise StoreReadOnly(self.path)
-        src = df.select(
+        routed = df.select(
             F.col(id_col).cast("long").alias("id"), F.col(data_col).alias("data")
-        ).withColumn("_sz", F.length("data").cast("long"))
+        ).mapInPandas(_route_batches_for(self.manifest["cipher"], self.inline_max), _ROUTED_SCHEMA)
         with self._write_lease("put_blobs"):
-            src.persist()
+            routed.persist()
             try:
-                return self._put_blobs_inner(src, data_col)
+                return self._put_routed(routed, data_col)
             finally:
-                src.unpersist()
+                routed.unpersist()
 
-    def _put_blobs_inner(self, src: DataFrame, data_col: str = "data") -> DataFrame:
-        # one cheap pass over sizes decides which tiers exist → absent tiers
-        # cost zero jobs (important: most workloads are single-tier); the
-        # NULL-payload guard rides the same aggregate — a separate head(1)
-        # probe job per put was pure serial-job overhead (r12 optimization:
-        # one fewer driver action per put on every put path)
-        tier_counts = src.agg(
-            F.sum(F.col("data").isNull().cast("long")).alias("n_null"),
-            F.max(F.when(F.col("data").isNull(), F.col("id"))).alias("null_id"),
-            F.sum((F.col("_sz") <= self.inline_max).cast("long")).alias("n_raw"),
-            F.sum(
-                ((F.col("_sz") > self.inline_max) & (F.col("_sz") <= MAX_DECRYPTED_SIZE)).cast(
-                    "long"
-                )
-            ).alias("n_mid"),
-            F.sum((F.col("_sz") > MAX_DECRYPTED_SIZE).cast("long")).alias("n_big"),
-            F.coalesce(F.sum("_sz"), F.lit(0)).alias("total"),
-            F.coalesce(
-                F.sum(F.when(F.col("_sz") <= self.inline_max, F.col("_sz")).otherwise(0)),
-                F.lit(0),
-            ).alias("raw_bytes"),
+    def _put_routed(self, routed: DataFrame, data_col: str) -> DataFrame:
+        # one aggregate before any write: which appends have rows, the quota
+        # sum, and the NULL-payload guard, which fails loudly because a NULL
+        # blob has no hkey to return (get_blobs makes the opposite
+        # guarantee: every input id appears in its output)
+        counts = routed.agg(
+            F.count(F.when(F.col("hkey").isNull(), 1)).alias("n_null"),
+            F.max(F.when(F.col("hkey").isNull(), F.col("id"))).alias("null_id"),
+            F.count("hash").alias("n_chunks"),
+            F.count("seq").alias("n_kids"),
+            F.coalesce(F.sum("size"), F.lit(0)).alias("storable"),
         ).head()
-        # NULL payloads match no size tier and would silently vanish from the
-        # returned (id, hkey) mapping — fail loudly instead (get_blobs makes
-        # the opposite guarantee: every input id appears in its output)
-        if int(tier_counts["n_null"] or 0):
+        if counts["n_null"]:
             raise ValueError(
-                f"put_blobs: NULL {data_col!r} for id {tier_counts['null_id']} — "
+                f"put_blobs: NULL {data_col!r} for id {counts['null_id']} — "
                 "blobs must be non-null bytes (use b'' for empty)"
             )
-        n_raw, n_mid, n_big = (
-            int(tier_counts["n_raw"] or 0),
-            int(tier_counts["n_mid"] or 0),
-            int(tier_counts["n_big"] or 0),
-        )
-
+        # conservative admission: every chunk at its plaintext size, as if
+        # none deduplicated — content already present dedups to 0 bytes at
+        # write time, so this can refuse early rather than admit over quota
         if self.quota_bytes is not None:
-            # conservative admission: counts storable tiers (mid+big) at full
-            # size — content already present dedups to 0 bytes at write time,
-            # so this can refuse early rather than admit over quota. The raw
-            # tier is inline-only and never counted.
-            storable = int(tier_counts["total"]) - int(tier_counts["raw_bytes"] or 0)
-            if self.stored_bytes() + storable > self.quota_bytes:
+            if self.stored_bytes() + int(counts["storable"]) > self.quota_bytes:
                 raise StoreOutOfSpace(f"{self.path}: quota {self.quota_bytes}")
-
-        hkey_parts: list[DataFrame] = []
-
-        # raw tier: inline base64url hkey, nothing stored (A11/A14 fast path)
-        if n_raw:
-            hkey_parts.append(
-                src.where(F.col("_sz") <= self.inline_max).select(
-                    "id",
-                    # translate() also strips the \r\n that Spark 3.3-3.5's
-                    # RFC-2045 MIME-chunked base64() inserts every 76 chars
-                    # (payloads > 57 bytes) — keeps raw hkeys byte-identical
-                    # to Hkey.encode's Python base64 on any Spark version
-                    F.concat(
-                        F.lit("raw:"),
-                        F.translate(F.base64("data"), "+/\r\n", "-_"),
-                    ).alias("hkey"),
-                )
-            )
-
-        # single-chunk tier: convergent encrypt + store
-        mid_enc = None
-        if n_mid:
-            mid = src.where(
-                (F.col("_sz") > self.inline_max) & (F.col("_sz") <= MAX_DECRYPTED_SIZE)
-            )
-            # NOT widened before the Python pass: a conditional repartition
-            # (the b64/_spread treatment) was A/B-measured here and REJECTED
-            # — interleaved at sf0.1 the spread drew 3.01 s vs 2.70 s without
-            # (every round), because the per-blob crypto is cheap relative to
-            # the blob-bytes exchange + 32-task scheduling it buys.  At real
-            # scale the scan has many splits and the question is moot.
-            mid_enc = (
-                mid.select("id", "data")
-                .mapInPandas(_encrypt_batches_for(self.manifest["cipher"]), _ENC_RESULT_SCHEMA)
-                .persist()
-            )
-
-        # tree tier: split into chunks, encrypt each child
-        children = None
-        if n_big:
-            big = src.where(F.col("_sz") > MAX_DECRYPTED_SIZE)
-            pieces = big.select("id", "data").mapInPandas(
-                _split_batches, "id long, root_hash string, root_size long, seq int, data binary"
-            )
-            # checkpoint: the synthetic join key (monotonically_increasing_id)
-            # must never be recomputed — a divergent recomputation could pair
-            # one chunk's metadata with another's ciphertext. Checkpointing
-            # also keeps the expensive re-chunking from running once per
-            # downstream branch.
-            pieces_enc = (
-                pieces.withColumnRenamed("id", "blob_id")
-                .withColumn("id", F.monotonically_increasing_id())
-                .select("blob_id", "root_hash", "root_size", "seq", "id", "data")
-                .localCheckpoint(eager=True)
-            )
-            child_enc = pieces_enc.select("id", "data").mapInPandas(
-                _encrypt_batches_for(self.manifest["cipher"]), _ENC_RESULT_SCHEMA
-            )
-            children = pieces_enc.drop("data").join(child_enc, "id").drop("id").persist()
-
-        # everything that lands in chunks/
-        store_parts = []
-        if mid_enc is not None:
-            store_parts.append(mid_enc.select("hash", "size", "enc", "data"))
-        if children is not None:
-            store_parts.append(children.select("hash", "size", "enc", "data"))
-        if store_parts:
-            to_store = store_parts[0]
-            for p in store_parts[1:]:
-                to_store = to_store.unionByName(p)
-            self._append_chunks(to_store)
-
-        # manifests for the tree tier (A13)
-        if children is not None:
+        chunks = routed.where(F.col("hash").isNotNull())
+        if counts["n_chunks"]:
+            self._append_chunks(chunks.select("hash", "size", "enc", "data"))
+        if counts["n_kids"]:  # manifests for the tree tier (A13)
             self._append_manifests(
-                children.select(
-                    "root_hash",
-                    F.col("seq").cast("int").alias("seq"),
+                chunks.where(F.col("seq").isNotNull()).select(
+                    F.split("hkey", ":").getItem(1).alias("root_hash"),
+                    "seq",
                     F.col("hash").alias("child_hash"),
                     F.col("key").alias("child_key"),
                     F.col("enc").alias("child_enc"),
                     F.col("size").alias("length"),
                 )
             )
-
-        if mid_enc is not None:
-            hkey_parts.append(
-                mid_enc.select(
-                    "id",
-                    F.when(
-                        F.col("kind") == "enc",
-                        F.concat_ws(
-                            ":",
-                            F.lit("enc"),
-                            F.col("hash"),
-                            F.col("key"),
-                            F.col("size").cast("string"),
-                        ),
-                    )
-                    .otherwise(
-                        F.concat_ws(
-                            ":", F.lit("plain"), F.col("hash"), F.col("size").cast("string")
-                        )
-                    )
-                    .alias("hkey"),
-                )
-            )
-        if children is not None:
-            hkey_parts.append(
-                children.groupBy("blob_id", "root_hash", "root_size")
-                .agg(F.count("*"))
-                .select(
-                    F.col("blob_id").alias("id"),
-                    F.concat_ws(
-                        ":", F.lit("tree"), F.col("root_hash"), F.col("root_size").cast("string")
-                    ).alias("hkey"),
-                )
-            )
-
-        if not hkey_parts:
-            result = self.spark.createDataFrame([], "id long, hkey string")
-        else:
-            result = hkey_parts[0]
-            for p in hkey_parts[1:]:
-                result = result.unionByName(p)
-            # cut lineage: callers' actions must not re-run encryption/writes
-            result = result.localCheckpoint(eager=True)
-        if mid_enc is not None:
-            mid_enc.unpersist()
-        if children is not None:
-            children.unpersist()
-        return result
+        # each blob's hkey from exactly one of its rows: the raw row, the one
+        # chunk, or a tree's first child. Cut lineage: callers' actions must
+        # not re-run encryption/writes
+        return (
+            routed.where(F.coalesce("seq", F.lit(0)) == 0)
+            .select("id", "hkey")
+            .localCheckpoint(eager=True)
+        )
 
     def _append_chunks(self, rows: DataFrame) -> None:
         """Dedup anti-join (A7 probe / A10 short-circuit) then partitioned append."""
@@ -1061,17 +937,10 @@ class Store:
         tree_kids = tree_roots.join(self.manifests(), "root_hash").select(
             F.col("child_hash").alias("hash")
         )
-        import hashlib as _hl
-
-        sentinel_plain = SENTINEL + b"\0" * self.inline_max
         # the sentinel was written at create time under the cipher recorded in
         # the manifest; recomputing with the current environment's cipher
         # would mis-hash it and garbage-collect the reference page-0 analog
-        sentinel_hash = _hl.sha256(
-            crypto.encrypt_as(
-                self.manifest["cipher"], sentinel_plain, crypto.convergent_key(sentinel_plain)
-            )
-        ).hexdigest()
+        sentinel_hash = _sentinel(self.manifest["cipher"], self.inline_max)[0]
         sentinel = self.spark.createDataFrame([(sentinel_hash,)], "hash string")
         live = direct.unionByName(tree_kids).unionByName(sentinel).distinct()
 

@@ -10,7 +10,8 @@ writer API, new in Spark 4), completing the source story in
        .option("hkeys_out", mapping_dir)      # optional id→hkey parquet
        .mode("append").save())
 
-Semantics match ``Store.put_blobs`` byte-for-byte (reference mapping:
+Semantics match ``Store.put_blobs`` byte-for-byte by construction: both
+route every blob with ``lake.store.route_blob`` (reference mapping:
 store/mod.rs:399-436 size routing, :386-389 convergent addressing):
 
   ≤ inline_max          → raw hkey only, nothing stored
@@ -21,10 +22,11 @@ store/mod.rs:399-436 size routing, :386-389 convergent addressing):
 
 Scale design — the commit protocol never copies chunk bytes:
 
-* ``write()`` (per task, Arrow record batches): routes tiers, encrypts,
-  splits, and performs the A7 dedup probe DISTRIBUTED — each task reads the
-  column-pruned ``hash`` column of only the ``hash_prefix=XX`` directories
-  it actually touches (the store's A6 bucket fan-out doing the index's job)
+* ``write()`` (per task, Arrow record batches): routes each blob with
+  ``route_blob`` and performs the A7 dedup probe DISTRIBUTED — each task
+  reads the column-pruned ``hash`` column of the data files (listed as every
+  store reader lists them) of only the ``hash_prefix=XX`` directories it
+  actually touches (the store's A6 bucket fan-out doing the index's job)
   and drops already-stored chunks before staging.  Surviving chunk rows are
   staged as per-(task, prefix) parquet files under a job-unique
   ``staging_<uuid>/`` directory INSIDE the store (same filesystem, so the
@@ -68,13 +70,7 @@ from pyspark.sql.datasource import (
 
 from ..errors import StoreOutOfSpace
 from ..lake import crypto
-from ..lake.store import (
-    _AEAD_OVERHEAD,
-    MAX_DECRYPTED_SIZE,
-    MAX_SIZE_RAW,
-    TREE_CHUNK_SIZE,
-    acquire_write_lease,
-)
+from ..lake.store import MAX_SIZE_RAW, _data_files, acquire_write_lease, route_blob
 
 
 @dataclass
@@ -83,7 +79,7 @@ class PsLakeCommitMessage(WriterCommitMessage):
     chunk_files: list = field(default_factory=list)
     manifest_file: str | None = None
     hkey_file: str | None = None
-    # prefix -> sorted basenames of the generation files the task probed;
+    # prefix -> sorted paths of the generation data files the task probed;
     # commit re-probes a prefix only when the live listing differs
     probed: dict = field(default_factory=dict)
     n_rows: int = 0
@@ -100,12 +96,6 @@ def _read_manifest(store_path: str) -> dict:
 def _active_dir(store_path: str, sub: str) -> str:
     manifest = _read_manifest(store_path)
     return os.path.join(store_path, manifest.get(f"{sub}_dir") or sub)
-
-
-def _list_parquet(d: str) -> list[str]:
-    if not os.path.isdir(d):
-        return []
-    return sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
 
 
 def _hash_column(path: str, column: str = "hash") -> list[str]:
@@ -146,17 +136,14 @@ class PsLakeWriter(DataSourceArrowWriter):
         """A7 probe, distributed: existing hashes of ONE bucket directory
         (column-pruned parquet reads), cached per task."""
         if prefix not in cache:
-            d = os.path.join(chunks_dir, f"hash_prefix={prefix}")
-            files = _list_parquet(d)
+            files = _data_files(os.path.join(chunks_dir, f"hash_prefix={prefix}"))
             seen: set[str] = set()
             for f in files:
-                seen.update(_hash_column(os.path.join(d, f)))
+                seen.update(_hash_column(f))
             cache[prefix] = (seen, files)
         return cache[prefix]
 
     def write(self, iterator: Iterator) -> PsLakeCommitMessage:
-        import hashlib
-
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -208,9 +195,8 @@ class PsLakeWriter(DataSourceArrowWriter):
             pending_bytes = 0
             flush_seq += 1
 
-        def _store_chunk(stored: bytes, plain_len: int, enc: str) -> str:
+        def _store_chunk(h: str, plain_len: int, enc: str, stored: bytes) -> None:
             nonlocal pending_bytes
-            h = hashlib.sha256(stored).hexdigest()
             prefix = h[: self.prefix_len]
             existing, _files = self._probe_prefix(chunks_dir, prefix, probe_cache)
             # A10 dedup short-circuit: already stored, already staged by an
@@ -224,14 +210,6 @@ class PsLakeWriter(DataSourceArrowWriter):
                 pending_bytes += len(stored)
                 if pending_bytes >= self.flush_bytes:
                     _flush_pending()
-            return h
-
-        def _encrypt(plain: bytes) -> tuple[bytes, str, str | None]:
-            key = crypto.convergent_key(plain)
-            cipher = crypto.encrypt_as(self.cipher, plain, key)
-            if len(cipher) > len(plain) + _AEAD_OVERHEAD:  # A12 guard
-                return plain, "plain", None
-            return cipher, self.cipher, key.hex()
 
         for batch in iterator:
             names = batch.schema.names
@@ -243,29 +221,13 @@ class PsLakeWriter(DataSourceArrowWriter):
                         f"pslake sink: NULL 'data' for id {blob_id} — "
                         "blobs must be non-null bytes (use b'' for empty)"
                     )
-                plain = bytes(payload)
                 n_rows += 1
-                if len(plain) <= self.inline_max:  # raw tier (A11 fast path)
-                    import base64
-
-                    hk = "raw:" + base64.urlsafe_b64encode(plain).decode("ascii")
-                elif len(plain) <= MAX_DECRYPTED_SIZE:  # single-chunk tier
-                    stored, enc, key_hex = _encrypt(plain)
-                    h = _store_chunk(stored, len(plain), enc)
-                    if enc == "plain":
-                        hk = f"plain:{h}:{len(plain)}"
-                    else:
-                        hk = f"enc:{h}:{key_hex}:{len(plain)}"
-                else:  # chunk-tree tier (A13)
-                    root = hashlib.sha256(plain).hexdigest()
-                    for seq, off in enumerate(range(0, len(plain), TREE_CHUNK_SIZE)):
-                        piece = plain[off : off + TREE_CHUNK_SIZE]
-                        stored, enc, key_hex = _encrypt(piece)
-                        h = _store_chunk(stored, len(piece), enc)
-                        manifest_rows[(root, seq)] = (
-                            root, seq, h, key_hex, enc, len(piece),
-                        )
-                    hk = f"tree:{root}:{len(plain)}"
+                hk, chunks = route_blob(bytes(payload), self.cipher, self.inline_max)
+                for h, size, enc, stored, key, seq in chunks:
+                    _store_chunk(h, size, enc, stored)
+                    if seq is not None:  # a tree child (A13)
+                        root = hk.split(":")[1]
+                        manifest_rows[(root, seq)] = (root, seq, h, key, enc, size)
                 if self.hkeys_out:
                     hkeys.append((int(blob_id), hk))
 
@@ -350,12 +312,11 @@ class PsLakeWriter(DataSourceArrowWriter):
             for prefix, probed_files in m.probed.items():
                 if prefix not in touched or prefix in reprobe:
                     continue
-                live = _list_parquet(os.path.join(chunks_dir, f"hash_prefix={prefix}"))
+                live = _data_files(os.path.join(chunks_dir, f"hash_prefix={prefix}"))
                 if live != probed_files:
                     seen: set[str] = set()
-                    d = os.path.join(chunks_dir, f"hash_prefix={prefix}")
                     for f in live:
-                        seen.update(_hash_column(os.path.join(d, f)))
+                        seen.update(_hash_column(f))
                     reprobe[prefix] = seen
 
         # 2. Keep/drop per staged file (hash columns only), global dedup
@@ -415,10 +376,8 @@ class PsLakeWriter(DataSourceArrowWriter):
         mfiles = sorted(m.manifest_file for m in msgs if m.manifest_file)
         if mfiles:
             existing_roots: set[str] = set()
-            for f in _list_parquet(manifests_dir):
-                existing_roots.update(
-                    _hash_column(os.path.join(manifests_dir, f), "root_hash")
-                )
+            for f in _data_files(manifests_dir):
+                existing_roots.update(_hash_column(f, "root_hash"))
             os.makedirs(manifests_dir, exist_ok=True)
             seen_roots: set[str] = set()
             for f in mfiles:

@@ -156,6 +156,10 @@ def test_sink_matches_put_blobs_exactly(spark, sink_store, tmp_path):
     sink_hashes = {r["hash"] for r in sink_store.chunks().collect()}
     put_hashes = {r["hash"] for r in other.chunks().collect()}
     assert sink_hashes == put_hashes
+    cols = ["root_hash", "seq", "child_hash", "child_key", "child_enc", "length"]
+    sink_tree = sorted(tuple(r) for r in sink_store.manifests().select(cols).collect())
+    put_tree = sorted(tuple(r) for r in other.manifests().select(cols).collect())
+    assert sink_tree and sink_tree == put_tree
 
 
 def test_sink_dedup_and_staging_cleanup(spark, sink_store):
@@ -167,6 +171,27 @@ def test_sink_dedup_and_staging_cleanup(spark, sink_store):
     assert sink_store.chunks().select("hash").distinct().count() == n1
     assert sink_store.manifests().count() == 6  # not doubled either
     assert not [d for d in os.listdir(sink_store.path) if d.startswith("staging_")]
+
+
+def test_sink_skips_torn_temporary_files(spark, sink_store, tmp_path):
+    """A torn `_tmp-` file in a partition (a crash mid-write) is skipped by
+    the sink's dedup probe and commit, as every store reader skips it."""
+    import glob
+
+    chunks = sink_store._active_path("chunks")
+    (sentinel,) = glob.glob(os.path.join(chunks, "hash_prefix=*", "*.parquet"))
+    with open(sentinel, "rb") as f:
+        head = f.read(os.path.getsize(sentinel) // 2)
+    for p in "0123456789abcdef":
+        part = os.path.join(chunks, f"hash_prefix={p}")
+        os.makedirs(part, exist_ok=True)
+        with open(os.path.join(part, "_tmp-part-00000-torn.parquet"), "wb") as f:
+            f.write(head)
+    rows = _tiered_rows()
+    df = spark.createDataFrame(rows, "id long, data binary").repartition(2)
+    _write(df, sink_store, hkeys_out=str(tmp_path / "hk"))
+    hk = {r["id"]: r["hkey"] for r in spark.read.parquet(str(tmp_path / "hk")).collect()}
+    assert {i: sink_store.get(k) for i, k in hk.items()} == dict(rows)
 
 
 def test_sink_honors_write_lease(spark, sink_store):

@@ -167,9 +167,8 @@ def test_maintenance_is_atomic_for_readers(spark, tmp_path):
 
 
 def test_put_blobs_null_payload_raises(spark, tmp_path):
-    """The NULL-payload guard must still fail loudly now that it rides the
-    tier-counts aggregate instead of its own head(1) probe job (r12
-    optimization: one fewer serial driver action per put)."""
+    """The NULL-payload guard fails loudly, from the one aggregate over the
+    routed rows that runs before any write."""
     import pytest
 
     store = Store.create(spark, str(tmp_path / "null_store"), prefix_len=1)
@@ -229,6 +228,25 @@ def _read_back(store, hkeys: list[str]) -> list:
     assert sorted(r["id"] for r in rows) == list(range(len(hkeys))), "one row per id"
     got = {r["id"]: r["data"] for r in rows}
     return [None if got[i] is None else bytes(got[i]) for i in range(len(hkeys))]
+
+
+def test_put_job_counts(spark, tmp_path):
+    """A put is one routing map pass, one aggregate, the chunk (and, for a
+    tree, manifest) appends and the hkey checkpoint: at most 13 Spark jobs
+    with a tree, at most 9 without."""
+    from .test_point_read import _jobs
+
+    store = Store.create(spark, str(tmp_path / "put_jobs"), prefix_len=1)
+    out = {}
+    assert _jobs(spark, lambda: out.update(mixed=_put_mixed(spark, store))) <= 13
+    assert {hk.split(":")[0] for hk, _ in out["mixed"].values()} == {"raw", "enc", "tree"}
+    df = spark.createDataFrame(
+        [(0, bytearray(_blob(50))), (1, bytearray(_blob(4000)))], "id long, data binary"
+    )
+    assert _jobs(spark, lambda: out.update(flat=store.put_blobs(df).collect())) <= 9
+    assert {r["hkey"].split(":")[0] for r in out["flat"]} == {"raw", "enc"}
+    for hk, blob in out["mixed"].values():
+        assert store.get(hk) == blob
 
 
 def test_get_blobs_mixed_batch_in_at_most_two_jobs(spark, tmp_path):
