@@ -7,7 +7,8 @@ reference ↔ Spark mapping (SURVEY.md §1.4):
                                            the header: magic, version, layout)
   open-addressing hash index (A6/A7)     → list the one hash_prefix directory +
                                            Parquet min/max stats on hash
-  bump allocator / pages (A10)           → Parquet append mode
+  bump allocator / pages (A10)           → staged parquet files renamed into the
+                                           partition directory (lake/publish.py)
   8 load-time corruption checks (A4)     → manifest magic/version/layout checks
                                            + dataset schema assertion
   sentinel page 0 (store/mod.rs:231-235) → sentinel chunk written at create
@@ -18,25 +19,33 @@ Size routing (A11–A14, store/mod.rs:399-436), all in `route_blob`:
   else                  → split into TREE_CHUNK_SIZE chunks → child puts +
                           manifests rows keyed by sha256(plaintext)
 
-Scale notes: every put is one map pass that routes each blob with
-`route_blob` (the `pslake` sink calls the same function per blob), one
-aggregate over the routed rows, one anti-join (dedup, A10's
-probe-then-write) and one partitioned append; no driver-side loops over rows.
-hash_prefix gives 16^n balanced partitions (content hashes are uniform). A
-point read (`get`, `has`) runs no Spark job: the driver lists the one
-hash_prefix directory and reads it with pyarrow, and the filter on `hash`
-skips row groups by min/max stats, so its cost follows the size of one
-partition, not of the store. A batch read (`get_blobs`) runs the same reader
-(`read_blobs`) in one map pass over keys repartitioned by hash prefix, so it
-reads only the partitions its keys touch. Puts and maintenance stay
-distributed.
+Scale notes: mutations publish files, not rows (`lake/publish.py`). A put
+is one map pass that routes each blob with `route_blob`, probes only the
+hash_prefix directories its chunks touch and stages the new chunks inside
+the store (A10's probe-then-write), then a driver-side commit that renames
+the staged files into place under the write lease; a put that fits in one
+staging flush is merged into one file per prefix first. The `pslake` sink
+runs the same stager and commit, and `put_blob` runs both on the driver with
+no Spark job. A vacuum is one map pass over the live hashes repartitioned by
+prefix that hard-links every file holding no dead hash into the new
+generation and rewrites only the others. hash_prefix gives 16^n balanced
+partitions (content hashes are uniform). A point read (`get`, `has`) runs
+no Spark job: the driver lists the one hash_prefix directory and reads it
+with pyarrow, and the filter on `hash` skips row groups by min/max stats, so
+its cost follows the size of one partition, not of the store. A batch read
+(`get_blobs`) runs the same reader (`read_blobs`) in one map pass over keys
+repartitioned by hash prefix, so it reads only the partitions its keys
+touch.
 """
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
+import shutil
+import uuid
 from typing import Iterator
 
 import pandas as pd
@@ -54,7 +63,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..errors import Corrupted, InvalidHkey, NotFound, StoreBusy, StoreOutOfSpace, StoreReadOnly
+from ..errors import Corrupted, InvalidHkey, NotFound, StoreBusy, StoreReadOnly
 from . import crypto
 from .hkey import HASH_RE, Hkey
 
@@ -111,11 +120,6 @@ MANIFESTS_ARROW_SCHEMA = pa.schema(
     ]
 )
 
-_ROUTED_SCHEMA = (
-    "id long, hkey string, hash string, size long, enc string, data binary, key string, seq int"
-)
-_ROUTED_COLUMNS = [c.split()[0] for c in _ROUTED_SCHEMA.split(", ")]
-
 
 def _seal(cipher: str, plain: bytes, seq: int | None = None) -> tuple:
     """One stored chunk of ``plain``: (hash, size, enc, data, key, seq).
@@ -138,8 +142,9 @@ def _seal(cipher: str, plain: bytes, seq: int | None = None) -> tuple:
 def route_blob(plain: bytes, cipher: str, inline_max: int) -> tuple[str, list[tuple]]:
     """The put's size routing (A11–A14, store/mod.rs:399-436): a blob's hkey
     and the chunks to store, each as :func:`_seal` returns it. Every put
-    path calls it: ``Store.put_blobs`` in its map pass and the ``pslake``
-    sink per blob, so both write the same bytes by construction.
+    path calls it through ``publish.Stager``: ``Store.put_blobs``,
+    ``Store.put_blob`` and the ``pslake`` sink, so all write the same bytes
+    by construction.
 
     A blob of at most ``inline_max`` bytes is a raw hkey with no chunk; one
     of at most MAX_DECRYPTED_SIZE is one chunk; a larger one is a tree of
@@ -165,25 +170,6 @@ def _sentinel(cipher: str, inline_max: int) -> tuple:
     ``inline_max`` close to MAX_DECRYPTED_SIZE the router would make it a
     tree."""
     return _seal(cipher, SENTINEL + b"\0" * inline_max)
-
-
-def _route_batches_for(cipher: str, inline_max: int):
-    """mapInPandas worker factory: :func:`route_blob` over (id, data) rows.
-    Emits one row per stored chunk, one chunk-less row per raw blob, and a
-    row with a NULL hkey for a NULL payload, which the put refuses."""
-
-    def _route_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for blob_id, payload in zip(pdf["id"], pdf["data"]):
-                if payload is None:
-                    rows.append((blob_id, None) + (None,) * 6)
-                    continue
-                hkey, chunks = route_blob(bytes(payload), cipher, inline_max)
-                rows.extend((blob_id, hkey) + c for c in chunks or [(None,) * 6])
-            yield pd.DataFrame(rows, columns=_ROUTED_COLUMNS)
-
-    return _route_batches
 
 
 def _data_files(d: str) -> list[str]:
@@ -322,7 +308,6 @@ def acquire_write_lease(path: str, op: str):
     reference mapping).  Context manager; raises StoreBusy when contended.
     Shared by Store mutations AND the pslake sink's driver-side commit, which
     runs in a plain Python worker with no SparkSession."""
-    import contextlib
     import time as _time
 
     lease_path = os.path.join(path, "write.lease")
@@ -423,8 +408,6 @@ class Store:
         # reusing a sentinel-less store. The file is written under a `_`
         # name, which every reader skips, and renamed into place, so a torn
         # write is never read.
-        import uuid
-
         import pyarrow.parquet as pq
 
         h, size, enc, data, _key, _seq = _sentinel(manifest["cipher"], inline_max)
@@ -543,8 +526,6 @@ class Store:
         (r4 advice, medium). Re-read and compare pid+ts (both round-trip
         exactly through JSON); on mismatch or unreadable content leave the
         file alone — the TTL reaper will collect it if it is truly dead."""
-        import contextlib
-
         try:
             with open(lease_path) as f:
                 held = json.load(f)
@@ -634,8 +615,6 @@ class Store:
         crashed half-written ones) are removed — retention depth 1, the
         minimum that makes maintenance non-disruptive for in-flight queries.
         """
-        import shutil as _sh
-
         # Re-read the ON-DISK manifest first: the write lease serializes
         # maintenance ops but does not refresh THIS handle's memory — a
         # long-lived handle whose last read predates another process's
@@ -670,7 +649,7 @@ class Store:
             if gen_pat.match(d) and d not in keep:
                 full = os.path.join(self.path, d)
                 if os.path.isdir(full):
-                    _sh.rmtree(full, ignore_errors=True)
+                    shutil.rmtree(full, ignore_errors=True)
 
     def _read_or_empty(self, sub: str, schema: StructType) -> DataFrame:
         """The active generation of ``sub``; empty only if it was never
@@ -712,112 +691,70 @@ class Store:
     def manifests(self) -> DataFrame:
         return self._read_or_empty("manifests", MANIFESTS_SCHEMA)
 
-    def stored_bytes(self) -> int:
-        row = self.chunks().agg(F.coalesce(F.sum("size"), F.lit(0)).alias("s")).head()
-        return int(row["s"])
-
     # -- write path (A10–A14) ------------------------------------------------
+
+    @contextlib.contextmanager
+    def _staged_put(self, op: str):
+        """Hold the write lease for a put and yield where its stagers
+        write; the staging directory is removed on the way out, whether or
+        not the put was committed."""
+        if self.readonly:
+            raise StoreReadOnly(self.path)
+        with self._write_lease(op):
+            staging = os.path.join(self.path, f"staging_{uuid.uuid4().hex[:12]}")
+            try:
+                yield self._active_path("chunks"), staging
+            finally:
+                shutil.rmtree(staging, ignore_errors=True)
 
     def put_blobs(self, df: DataFrame, id_col: str = "id", data_col: str = "data") -> DataFrame:
         """Distributed size-routed put. Returns (id, hkey) DataFrame.
 
-        Pipeline: one map pass routes and encrypts every blob with
-        :func:`route_blob` (Arrow batches) and is persisted → one aggregate
-        over the routed rows (NULL guard, quota) → anti-join against existing
-        hashes (the A7 probe) → partitioned append (the A10 publish) → the
-        hkeys, a filter of the routed rows. Content addressing makes the
-        whole thing idempotent.
+        One map pass runs a :class:`~.publish.Stager` per task: it routes
+        each blob with :func:`route_blob`, probes the hash_prefix
+        directories its chunks touch and stages the new chunks as parquet
+        inside the store. Its rows, collected in the put's one Spark job,
+        are the hkeys (about the size of the blobs' metadata), any NULL
+        payload and each task's staged share. The driver raises the
+        NULL-payload ValueError before anything is published, publishes with
+        :func:`~.publish.commit` under the write lease, and returns the
+        hkeys as a local DataFrame, so the caller's actions run no put again.
+        (A checkpoint read back in a second job instead kept the JVM busy
+        for up to a second after the put returned, CPU that landed on the
+        operations after it.) The quota rule is stated in
+        ``lake/publish.py``. Content addressing makes the put idempotent.
         """
-        if self.readonly:
-            raise StoreReadOnly(self.path)
-        routed = df.select(
-            F.col(id_col).cast("long").alias("id"), F.col(data_col).alias("data")
-        ).mapInPandas(_route_batches_for(self.manifest["cipher"], self.inline_max), _ROUTED_SCHEMA)
-        with self._write_lease("put_blobs"):
-            routed.persist()
-            try:
-                return self._put_routed(routed, data_col)
-            finally:
-                routed.unpersist()
+        from .publish import commit, stage_batches_for
 
-    def _put_routed(self, routed: DataFrame, data_col: str) -> DataFrame:
-        # one aggregate before any write: which appends have rows, the quota
-        # sum, and the NULL-payload guard, which fails loudly because a NULL
-        # blob has no hkey to return (get_blobs makes the opposite
-        # guarantee: every input id appears in its output)
-        counts = routed.agg(
-            F.count(F.when(F.col("hkey").isNull(), 1)).alias("n_null"),
-            F.max(F.when(F.col("hkey").isNull(), F.col("id"))).alias("null_id"),
-            F.count("hash").alias("n_chunks"),
-            F.count("seq").alias("n_kids"),
-            F.coalesce(F.sum("size"), F.lit(0)).alias("storable"),
-        ).head()
-        if counts["n_null"]:
-            raise ValueError(
-                f"put_blobs: NULL {data_col!r} for id {counts['null_id']} — "
-                "blobs must be non-null bytes (use b'' for empty)"
-            )
-        # conservative admission: every chunk at its plaintext size, as if
-        # none deduplicated — content already present dedups to 0 bytes at
-        # write time, so this can refuse early rather than admit over quota
-        if self.quota_bytes is not None:
-            if self.stored_bytes() + int(counts["storable"]) > self.quota_bytes:
-                raise StoreOutOfSpace(f"{self.path}: quota {self.quota_bytes}")
-        chunks = routed.where(F.col("hash").isNotNull())
-        if counts["n_chunks"]:
-            self._append_chunks(chunks.select("hash", "size", "enc", "data"))
-        if counts["n_kids"]:  # manifests for the tree tier (A13)
-            self._append_manifests(
-                chunks.where(F.col("seq").isNotNull()).select(
-                    F.split("hkey", ":").getItem(1).alias("root_hash"),
-                    "seq",
-                    F.col("hash").alias("child_hash"),
-                    F.col("key").alias("child_key"),
-                    F.col("enc").alias("child_enc"),
-                    F.col("size").alias("length"),
+        src = df.select(F.col(id_col).cast("long").alias("id"), F.col(data_col).alias("data"))
+        with self._staged_put("put_blobs") as (chunks_dir, staging):
+            rows = src.mapInPandas(
+                stage_batches_for(chunks_dir, staging, self.manifest),
+                "id long, hkey string, share string",
+            ).collect()
+            rest = [r for r in rows if r["hkey"] is None]
+            nulls = [r["id"] for r in rest if r["share"] is None]
+            if nulls:
+                # a NULL blob has no hkey to return (get_blobs makes the
+                # opposite guarantee: every input id appears in its output)
+                raise ValueError(
+                    f"put_blobs: NULL {data_col!r} for id {max(nulls)} — "
+                    "blobs must be non-null bytes (use b'' for empty)"
                 )
-            )
-        # each blob's hkey from exactly one of its rows: the raw row, the one
-        # chunk, or a tree's first child. Cut lineage: callers' actions must
-        # not re-run encryption/writes
-        return (
-            routed.where(F.coalesce("seq", F.lit(0)) == 0)
-            .select("id", "hkey")
-            .localCheckpoint(eager=True)
-        )
-
-    def _append_chunks(self, rows: DataFrame) -> None:
-        """Dedup anti-join (A7 probe / A10 short-circuit) then partitioned append."""
-        staged = (
-            rows.dropDuplicates(["hash"])
-            .join(self.chunks().select("hash"), "hash", "left_anti")
-            .withColumn("hash_prefix", F.substring("hash", 1, self.prefix_len))
-        )
-        # repartition on the partition column: exactly one file per prefix per
-        # append (at scale: avoids the tasks×partitions small-file explosion)
-        staged = staged.repartition("hash_prefix")
-        from ..plandump import dump_plan
-
-        dump_plan(staged, "put_blobs_append_chunks")  # the put's write job
-        staged.write.mode("append").partitionBy(
-            "hash_prefix"
-        ).parquet(self._active_path("chunks"))
-
-    def _append_manifests(self, rows: DataFrame) -> None:
-        # in-batch dedup first: two identical large blobs in one put batch
-        # produce the same (root_hash, seq) rows twice — without this, tree
-        # reads would double-concatenate and fail the length check
-        staged = rows.dropDuplicates(["root_hash", "seq"]).join(
-            self.manifests().select("root_hash").distinct(), "root_hash", "left_anti"
-        )
-        staged.write.mode("append").parquet(self._active_path("manifests"))
+            commit(self.path, [json.loads(r["share"]) for r in rest], self.quota_bytes)
+        hkeys = [(r["id"], r["hkey"]) for r in rows if r["hkey"] is not None]
+        return self.spark.createDataFrame(hkeys, "id long, hkey string")
 
     def put_blob(self, data: bytes) -> str:
-        """Single-blob convenience over the distributed path (A14)."""
-        out = self.put_blobs(
-            self.spark.createDataFrame([(0, bytearray(data))], "id long, data binary")
-        )
-        return out.head()["hkey"]
+        """Single-blob put (A14) on the driver, with no Spark job: the same
+        stager and commit as ``put_blobs``."""
+        from .publish import Stager, commit
+
+        with self._staged_put("put_blob") as (chunks_dir, staging):
+            stager = Stager(chunks_dir, staging, self.manifest)
+            hkey = stager.put(bytes(data))
+            commit(self.path, [stager.finish()], self.quota_bytes)
+        return hkey
 
     # -- read path (A7/A8/A15 analog) ---------------------------------------
 
@@ -885,7 +822,6 @@ class Store:
         write lease (_write_lease): a put racing this rewrite would append to
         the superseded generation and be dropped at the swap."""
         import glob
-        import uuid
 
         if self.readonly:
             raise StoreReadOnly(self.path)
@@ -912,9 +848,17 @@ class Store:
 
         Content-addressed stores can't know liveness locally — the caller
         supplies the root set (e.g. a catalog of live hkeys). Returns the
-        number of chunks removed. At scale this is one semi-join + rewrite,
-        same shape as compact(). Single-writer op, enforced by the exclusive
-        write lease (_write_lease).
+        number of chunks removed. ``roots`` is read once, into a local
+        checkpoint of its parsed (kind, hash). The live hashes, the children
+        of live tree roots from a join with the manifests, the sentinel and
+        one marker row per prefix directory are repartitioned by prefix into
+        min(#prefixes, default parallelism) tasks, each running
+        :func:`~.publish.sweep`: a file with no dead hash is hard-linked into
+        the new generation, and only a file with one is rewritten. The new
+        manifests generation links the old one's files unless a tree root
+        died, and is published before the chunks generation, so no
+        manifests row ever names an absent chunk. Single-writer op, enforced
+        by the exclusive write lease (_write_lease).
         """
         if self.readonly:
             raise StoreReadOnly(self.path)
@@ -922,48 +866,79 @@ class Store:
             return self._vacuum_inner(roots, hkey_col)
 
     def _vacuum_inner(self, roots: DataFrame, hkey_col: str) -> int:
-        if not os.path.isdir(self._active_path("chunks")):
+        from .publish import sweep_batches_for
+
+        old = self._active_path("chunks")
+        prefixes = sorted({p for _f, p in list_chunk_files(old)})
+        if not prefixes:
             return 0
         parts = F.split(F.col(hkey_col), ":")
         parsed = roots.select(
-            parts.getItem(0).alias("kind"), parts.getItem(1).alias("href")
+            parts.getItem(0).alias("kind"), parts.getItem(1).alias("hash")
+        ).localCheckpoint(eager=True)
+        trees = parsed.where(F.col("kind") == "tree").select(F.col("hash").alias("root_hash"))
+        # a tree child row names its manifests row as "root:seq" in `kid`
+        kids = trees.join(self.manifests(), "root_hash").select(
+            F.col("child_hash").alias("hash"), F.concat_ws(":", "root_hash", "seq").alias("kid")
         )
         direct = parsed.where(F.col("kind").isin("plain", "enc")).select(
-            F.col("href").alias("hash")
-        )
-        tree_roots = parsed.where(F.col("kind") == "tree").select(
-            F.col("href").alias("root_hash")
-        )
-        tree_kids = tree_roots.join(self.manifests(), "root_hash").select(
-            F.col("child_hash").alias("hash")
+            "hash", F.lit(None).cast("string").alias("kid")
         )
         # the sentinel was written at create time under the cipher recorded in
         # the manifest; recomputing with the current environment's cipher
         # would mis-hash it and garbage-collect the reference page-0 analog
-        sentinel_hash = _sentinel(self.manifest["cipher"], self.inline_max)[0]
-        sentinel = self.spark.createDataFrame([(sentinel_hash,)], "hash string")
-        live = direct.unionByName(tree_kids).unionByName(sentinel).distinct()
-
-        import uuid
-
-        before = self.chunks().count()
-        kept = self.chunks().join(live, "hash", "left_semi")
+        sentinel = _sentinel(self.manifest["cipher"], self.inline_max)[0]
+        pl = self.prefix_len
+        fixed = self.spark.createDataFrame(
+            [(sentinel[:pl], sentinel, None)] + [(p, None, None) for p in prefixes],
+            "prefix string, hash string, kid string",
+        )
+        live = (
+            direct.unionByName(kids)
+            .select(F.substring("hash", 1, pl).alias("prefix"), "hash", "kid")
+            .unionByName(fixed)
+        )
         new_chunks = f"chunks_g{uuid.uuid4().hex[:8]}"
-        kept.repartition("hash_prefix").write.mode("overwrite").partitionBy(
-            "hash_prefix"
-        ).parquet(os.path.join(self.path, new_chunks))
-        self._commit_generation("chunks", new_chunks)
-        # manifests for unreachable tree roots are swept too — same atomic
-        # generation swap
-        live_roots = tree_roots.distinct()
-        if os.path.isdir(self._active_path("manifests")):
-            kept_manifests = self.manifests().join(live_roots, "root_hash", "left_semi")
-            new_manifests = f"manifests_g{uuid.uuid4().hex[:8]}"
-            kept_manifests.write.mode("overwrite").parquet(
-                os.path.join(self.path, new_manifests)
+        os.makedirs(os.path.join(self.path, new_chunks))  # published even if nothing lives
+        n = min(len(prefixes), self.spark.sparkContext.defaultParallelism)
+        swept = (
+            live.repartition(n, "prefix")
+            .mapInPandas(
+                sweep_batches_for(old, os.path.join(self.path, new_chunks)),
+                "removed long, kids long",
             )
-            self._commit_generation("manifests", new_manifests)
-        return before - self.chunks().count()
+            .collect()
+        )
+        n_rows = _read_files(
+            _data_files(self._active_path("manifests")),
+            MANIFESTS_ARROW_SCHEMA,
+            ["root_hash"],
+            None,
+        ).num_rows
+        # every manifests row reached a task as a tree child unless a root died
+        dead_tree = sum(r["kids"] for r in swept) != n_rows
+        self._swap_in(new_chunks, {r[0] for r in trees.collect()} if dead_tree else None)
+        return sum(r["removed"] for r in swept)
+
+    def _swap_in(self, new_chunks: str, live_roots: set[str] | None) -> None:
+        """Publish a vacuum's generations: a new manifests generation with
+        the rows of ``live_roots`` (every row when None, each file
+        hard-linked), then ``new_chunks``."""
+        from .publish import publish_file
+
+        manifests = self._active_path("manifests")
+        if os.path.isdir(manifests):
+            new = f"manifests_g{uuid.uuid4().hex[:8]}"
+            os.makedirs(os.path.join(self.path, new))
+            for f in _data_files(manifests):
+                keep = None
+                if live_roots is not None:
+                    t = _read_files([f], MANIFESTS_ARROW_SCHEMA, ["root_hash"], None)
+                    keep = [r in live_roots for r in t.column(0).to_pylist()]
+                if keep is None or any(keep):
+                    publish_file(f, os.path.join(self.path, new), keep, link=True)
+            self._commit_generation("manifests", new)
+        self._commit_generation("chunks", new_chunks)
 
     def stats(self) -> dict:
         """Store-level statistics (manifest-header analog of the reference's

@@ -90,9 +90,9 @@ def b38_put_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         blobs = _doc_blobs(spark, sf_dir)
         first = store.put_blobs(blobs)
-        # put_blobs is eager (appends committed, result localCheckpointed), so
+        # put_blobs is eager (committed, its hkeys a local DataFrame), so
         # the second put needs no action of its own, and n_blobs/n_raw read
-        # the checkpointed mapping in ONE aggregate — 3 serial driver jobs
+        # the returned mapping in ONE aggregate — 3 serial driver jobs
         # fewer per run than the count()-per-statistic draft (r12
         # optimization; results identical by construction)
         store.put_blobs(blobs)  # idempotent second put (eager inside)

@@ -984,12 +984,13 @@ def b42_llm_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ._util import dump_plan
 
-    dump_plan(out, "b42_llm_pipeline_final")  # pre-checkpoint builder job
-    result = out.localCheckpoint(eager=True)  # the pipeline's ONLY barrier
-    _sh.unpersist()
-    survivors.unpersist()
-    exact_kept.unpersist()
-    return result
+    try:
+        dump_plan(out, "b42_llm_pipeline_final")  # pre-checkpoint builder job
+        return out.localCheckpoint(eager=True)  # the pipeline's ONLY barrier
+    finally:
+        _sh.unpersist()
+        survivors.unpersist()
+        exact_kept.unpersist()
 
 
 # ---------------------------------------------------------------------------

@@ -100,9 +100,11 @@ def test_point_reads_run_no_spark_job(spark, lake):
 def test_point_read_skips_spark_side_files(lake):
     """Spark leaves `_SUCCESS` and `.crc` files beside the data; the point
     read must skip them as Spark's listing does, even when they are not
-    Parquet at all."""
+    Parquet at all. A put stages its files with pyarrow and leaves none, so
+    a compact, which is a Spark write, makes them."""
     lk, in_b = lake
     store = lk.writable[1]
+    store.compact()
     chunks = store._active_path("chunks")
     assert os.path.exists(os.path.join(chunks, "_SUCCESS"))
     assert glob.glob(os.path.join(chunks, "hash_prefix=*", ".*.crc"))

@@ -231,22 +231,154 @@ def _read_back(store, hkeys: list[str]) -> list:
 
 
 def test_put_job_counts(spark, tmp_path):
-    """A put is one routing map pass, one aggregate, the chunk (and, for a
-    tree, manifest) appends and the hkey checkpoint: at most 13 Spark jobs
-    with a tree, at most 9 without."""
+    """A put is one map pass that routes, probes and stages, collected with
+    the tasks' staged shares before the driver commits; its hkeys come back
+    as a local DataFrame. With the caller's collect, at most 2 Spark jobs,
+    with a tree or without."""
     from .test_point_read import _jobs
 
     store = Store.create(spark, str(tmp_path / "put_jobs"), prefix_len=1)
     out = {}
-    assert _jobs(spark, lambda: out.update(mixed=_put_mixed(spark, store))) <= 13
+    assert _jobs(spark, lambda: out.update(mixed=_put_mixed(spark, store))) <= 2
     assert {hk.split(":")[0] for hk, _ in out["mixed"].values()} == {"raw", "enc", "tree"}
     df = spark.createDataFrame(
         [(0, bytearray(_blob(50))), (1, bytearray(_blob(4000)))], "id long, data binary"
     )
-    assert _jobs(spark, lambda: out.update(flat=store.put_blobs(df).collect())) <= 9
+    assert _jobs(spark, lambda: out.update(flat=store.put_blobs(df).collect())) <= 2
     assert {r["hkey"].split(":")[0] for r in out["flat"]} == {"raw", "enc"}
     for hk, blob in out["mixed"].values():
         assert store.get(hk) == blob
+
+
+def test_put_blob_runs_no_spark_job(spark, tmp_path):
+    from .test_point_read import _jobs
+
+    store = Store.create(spark, str(tmp_path / "put_one"), prefix_len=1)
+    sizes = (60, 4000, MAX_DECRYPTED_SIZE + 5000, 4000)
+    out = []
+    for n in sizes:
+        assert _jobs(spark, lambda: out.append(store.put_blob(_blob(n)))) == 0, n
+    assert out[1] == out[3]
+    assert [store.get(hk) for hk in out] == [_blob(n) for n in sizes]
+    # the sentinel, one enc chunk and two distinct tree children: _blob
+    # repeats every 256 bytes, so the tree's first four children are equal
+    assert store.chunks().count() == 1 + 1 + 2
+
+
+def test_vacuum_removing_nothing_links_every_file(spark, tmp_path):
+    """A vacuum whose roots keep everything rewrites no data: every file of
+    the new chunks and manifests generations is a hard link of its twin in
+    the previous one, which still reads."""
+    import glob
+    import os
+
+    from .test_point_read import _jobs
+
+    store = Store.create(spark, str(tmp_path / "vac_links"), prefix_len=1)
+    stored = _put_mixed(spark, store)
+    extra = store.put_blob(_blob(9999))  # a second file in some partition
+    roots = spark.createDataFrame(
+        [(hk,) for hk, _ in stored.values()] + [(extra,)], "hkey string"
+    )
+    before = {sub: store._active_path(sub) for sub in ("chunks", "manifests")}
+    n = store.chunks().count()
+    out = {}
+    assert _jobs(spark, lambda: out.update(removed=store.vacuum(roots))) <= 4
+    assert out["removed"] == 0
+    for sub, old in before.items():
+        new = store._active_path(sub)
+        assert new != old
+        old_files = sorted(glob.glob(os.path.join(old, "**", "*.parquet"), recursive=True))
+        new_files = sorted(glob.glob(os.path.join(new, "**", "*.parquet"), recursive=True))
+        assert [os.path.relpath(f, new) for f in new_files] == [
+            os.path.relpath(f, old) for f in old_files
+        ]
+        for a, b in zip(old_files, new_files):
+            assert os.stat(a).st_ino == os.stat(b).st_ino, b
+    assert store.chunks().count() == store.chunks_at(-1).count() == n
+    for hk, blob in stored.values():
+        assert store.get(hk) == blob
+
+
+def test_vacuum_reads_roots_once(spark, tmp_path):
+    """The caller's roots lineage is evaluated exactly once, however many
+    times the sweep uses it."""
+    import pandas as pd
+
+    store = Store.create(spark, str(tmp_path / "vac_once"), prefix_len=1)
+    stored = _put_mixed(spark, store)
+    keys = [hk for hk, _ in stored.values()]
+    seen = spark.sparkContext.accumulator(0)
+
+    def _count(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    roots = spark.createDataFrame(pd.DataFrame({"hkey": keys[:-1]})).mapInPandas(
+        _count, "hkey string"
+    )
+    assert store.vacuum(roots) > 0
+    assert seen.value == len(keys) - 1
+    for hk, blob in list(stored.values())[:-1]:
+        assert store.get(hk) == blob
+
+
+def test_quota_rule_is_the_same_for_every_put_path(spark, tmp_path):
+    """One rule: every routed chunk at its plaintext size, as if none
+    deduplicated, plus the stored plaintext bytes, must fit the quota. It
+    holds for put_blobs, put_blob and the pslake sink, and a refused put
+    leaves nothing behind: no chunk and no staging directory."""
+    import os
+
+    import pytest
+
+    from ps_datalake_spark.errors import StoreOutOfSpace
+    from ps_datalake_spark.lake.store import MAX_SIZE_RAW, SENTINEL
+    from ps_datalake_spark.sources import register_pslake
+
+    register_pslake(spark)
+    blobs = [_blob(3000), _blob(5000)]
+    df = spark.createDataFrame([(i, bytearray(b)) for i, b in enumerate(blobs)], "id long, data binary")
+    sentinel = len(SENTINEL) + MAX_SIZE_RAW
+    for way in ("put_blobs", "put_blob", "sink"):
+        # room for both blobs once, not for a second, deduplicated copy
+        store = Store.create(
+            spark, str(tmp_path / f"quota_{way}"), prefix_len=1, quota_bytes=sentinel + 8000 + 4999
+        )
+
+        def put():
+            if way == "put_blobs":
+                store.put_blobs(df).collect()
+            elif way == "put_blob":
+                for b in blobs:
+                    store.put_blob(b)
+            else:
+                df.write.format("pslake").option("path", store.path).mode("append").save()
+
+        put()
+        assert store.chunks().count() == 3, way
+        with pytest.raises(Exception, match="quota") as err:
+            put()  # dedups to nothing, but is refused under the conservative rule
+        if way != "sink":
+            assert err.type is StoreOutOfSpace
+        assert store.chunks().count() == 3, way
+        assert not [d for d in os.listdir(store.path) if d.startswith("staging_")], way
+
+
+def test_lake_waterfall_refusal_leaves_no_staging(spark, tmp_path):
+    import os
+
+    from ps_datalake_spark.lake import Lake
+
+    full = Store.create(spark, str(tmp_path / "full"), prefix_len=1, quota_bytes=1)
+    idle = Store.create(spark, str(tmp_path / "idle"), prefix_len=1)
+    lake = Lake(spark, readable=[full, idle], writable=[full, idle])
+    stored = _put_mixed(spark, lake)
+    assert full.chunks().count() == 1
+    assert not [d for d in os.listdir(full.path) if d.startswith("staging_")]
+    for hk, blob in stored.values():
+        assert idle.get(hk) == blob
 
 
 def test_get_blobs_mixed_batch_in_at_most_two_jobs(spark, tmp_path):
