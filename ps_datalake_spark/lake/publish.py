@@ -14,10 +14,10 @@ before it writes (store/mod.rs:321-326) and publishes last (:348-362):
 * :func:`commit` runs on the driver under the store's write lease. It
   re-probes a prefix only if its listing changed since a stager probed it,
   drops hashes staged twice, admits the put against the quota, and renames
-  every staged file into the active chunks generation; a put that fits in
-  one flush has its files merged into one per prefix first. A file that
-  holds a duplicate is rewritten with its kept rows under a ``_tmp-`` name,
-  which every reader skips, and renamed into place. The manifests rows of trees
+  every staged file into the active chunks generation, so a put publishes
+  up to one file per stager and touched prefix. A file that holds a
+  duplicate is rewritten with its kept rows under a ``_tmp-`` name, which
+  every reader skips, and renamed into place. The manifests rows of trees
   are published last, so no manifests row names a chunk that is absent.
   A crash mid-commit leaves a subset of the chunks published; a re-run
   dedups against it and completes the put.
@@ -42,6 +42,7 @@ from typing import Iterator
 
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from ..errors import StoreOutOfSpace
@@ -157,8 +158,8 @@ class Stager:
 
     def finish(self) -> dict:
         """Flush what is pending, stage the manifests rows, and return the
-        share: its staged files, the listings it probed, its routed bytes
-        and its flush threshold, all JSON-serialisable."""
+        share: its staged files, the listings it probed and its routed
+        bytes, all JSON-serialisable."""
         self._flush()
         manifests = None
         if self.trees:
@@ -170,7 +171,6 @@ class Stager:
             "manifests": manifests,
             "probed": {p: files for p, (_hashes, files) in self.probed.items()},
             "routed_bytes": self.routed_bytes,
-            "flush_bytes": self.flush_bytes,
         }
 
 
@@ -184,39 +184,30 @@ def commit(store_path: str, shares: list[dict], quota_bytes: int | None) -> None
     for share in shares:
         for prefix, f in share["chunks"]:
             touched.setdefault(prefix, []).append(f)
-    # Hashes stored or staged by an earlier file. A probe can only be stale
-    # if another writer committed in between, and then the prefix's listing
-    # differs from the one the stager read: only such a prefix is re-read.
-    seen: set[str] = set()
-    for prefix in {p for s in shares for p, files in s["probed"].items() if p in touched}:
-        live = _data_files(_prefix_dir(chunks_dir, prefix))
-        if any(s["probed"].get(prefix, live) != live for s in shares):
-            seen.update(_column(live, "hash"))
-    plan: dict[str, list[tuple[str, list[bool]]]] = {}
+    plan: dict[str, list[tuple[str, list[bool] | None]]] = {}
     for prefix in sorted(touched):
+        # `seen`: the prefix's hashes stored or staged by an earlier file. A
+        # probe can only be stale if another writer committed in between,
+        # and then the prefix's listing differs from the one a stager read:
+        # only such a prefix is re-read. Hashes never repeat across
+        # prefixes, so the driver holds one prefix's hashes at a time.
+        live = _data_files(_prefix_dir(chunks_dir, prefix))
+        stale = any(s["probed"].get(prefix, live) != live for s in shares)
+        seen = set(_column(live, "hash")) if stale else set()
         for f in sorted(touched[prefix]):
             keep = []
             for h in _column([f], "hash"):
                 keep.append(h not in seen)
                 seen.add(h)
             if any(keep):
-                plan.setdefault(prefix, []).append((f, keep))
+                plan.setdefault(prefix, []).append((f, None if all(keep) else keep))
     if quota_bytes is not None:
         routed = sum(s["routed_bytes"] for s in shares)
         files = [f for f, _p in list_chunk_files(chunks_dir)]
-        if sum(_column(files, "size")) + routed > quota_bytes:
+        stored = pc.sum(_read_files(files, CHUNKS_ARROW_SCHEMA, ["size"], None).column(0)).as_py()
+        if (stored or 0) + routed > quota_bytes:
             raise StoreOutOfSpace(f"{store_path}: quota {quota_bytes}")
-    # A put whose staged chunks fit in one flush is published as one file
-    # per prefix, its stagers' files merged on the driver, so that small puts
-    # do not multiply the files each read of a prefix opens; a bigger one is
-    # published file by file.
-    staged = sum(os.path.getsize(f) for files in plan.values() for f, _keep in files)
-    merge = staged <= min((s["flush_bytes"] for s in shares), default=0)
     for prefix, files in plan.items():
-        if merge and len(files) > 1:
-            kept = [pq.ParquetFile(f).read().filter(pa.array(keep)) for f, keep in files]
-            pq.write_table(pa.concat_tables(kept), files[0][0])
-            files = [(files[0][0], None)]
         for f, keep in files:
             publish_file(f, _prefix_dir(chunks_dir, prefix), keep)
     # a root staged by an earlier file wins whole: a stager stages every
@@ -232,18 +223,39 @@ def commit(store_path: str, shares: list[dict], quota_bytes: int | None) -> None
 
 def stage_batches_for(chunks_dir: str, staging: str, manifest: dict):
     """mapInPandas worker factory for ``Store.put_blobs``: one Stager per
-    task over (id, data) rows. Emits (id, hkey) per blob, (id, NULL) for a
-    NULL payload, which the driver refuses, and last one row with a NULL
-    hkey whose ``share`` is the task's staged share as JSON."""
+    task over (id, data) rows. Emits (id, hkey) per non-NULL blob. The
+    task's share, with the ids of its NULL payloads, which the driver
+    refuses, goes to ``shares/part-<partition>.json`` under ``staging``; a
+    retried task replaces its partition's file."""
 
     def _stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        stager = Stager(chunks_dir, staging, manifest)
+        from pyspark import TaskContext
+
+        stager, nulls = Stager(chunks_dir, staging, manifest), []
         for pdf in batches:
-            hkeys = [None if b is None else stager.put(bytes(b)) for b in pdf["data"]]
-            yield pd.DataFrame({"id": pdf["id"], "hkey": hkeys, "share": None})
-        yield pd.DataFrame({"id": [0], "hkey": [None], "share": [json.dumps(stager.finish())]})
+            ok = pdf["data"].notna()
+            nulls += pdf["id"][~ok].tolist()
+            hkeys = [stager.put(bytes(b)) for b in pdf["data"][ok]]
+            yield pd.DataFrame({"id": pdf["id"][ok].to_numpy(), "hkey": hkeys})
+        share = {**stager.finish(), "nulls": nulls}
+        out = os.path.join(staging, "shares", f"part-{TaskContext.get().partitionId():05d}.json")
+        os.makedirs(os.path.dirname(out), exist_ok=True)
+        with open(out + f".{stager.uid}", "w") as f:
+            json.dump(share, f)
+        os.replace(out + f".{stager.uid}", out)
 
     return _stage
+
+
+def read_shares(staging: str) -> list[dict]:
+    """The shares ``stage_batches_for``'s tasks left under ``staging``."""
+    d = os.path.join(staging, "shares")
+    names = sorted(n for n in os.listdir(d) if n.endswith(".json")) if os.path.isdir(d) else []
+    shares = []
+    for n in names:
+        with open(os.path.join(d, n)) as f:
+            shares.append(json.load(f))
+    return shares
 
 
 def sweep(old_dir: str, new_dir: str, live: dict[str, set[str]]) -> int:

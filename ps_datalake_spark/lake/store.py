@@ -23,8 +23,9 @@ Scale notes: mutations publish files, not rows (`lake/publish.py`). A put
 is one map pass that routes each blob with `route_blob`, probes only the
 hash_prefix directories its chunks touch and stages the new chunks inside
 the store (A10's probe-then-write), then a driver-side commit that renames
-the staged files into place under the write lease; a put that fits in one
-staging flush is merged into one file per prefix first. The `pslake` sink
+the staged files into place under the write lease, up to one file per
+task and touched prefix. The hkeys stay distributed in a local checkpoint;
+the driver reads only each task's staged share. The `pslake` sink
 runs the same stager and commit, and `put_blob` runs both on the driver with
 no Spark job. A vacuum is one map pass over the live hashes repartitioned by
 prefix that hard-links every file holding no dead hash into the new
@@ -713,37 +714,35 @@ class Store:
         One map pass runs a :class:`~.publish.Stager` per task: it routes
         each blob with :func:`route_blob`, probes the hash_prefix
         directories its chunks touch and stages the new chunks as parquet
-        inside the store. Its rows, collected in the put's one Spark job,
-        are the hkeys (about the size of the blobs' metadata), any NULL
-        payload and each task's staged share. The driver raises the
-        NULL-payload ValueError before anything is published, publishes with
-        :func:`~.publish.commit` under the write lease, and returns the
-        hkeys as a local DataFrame, so the caller's actions run no put again.
-        (A checkpoint read back in a second job instead kept the JVM busy
-        for up to a second after the put returned, CPU that landed on the
-        operations after it.) The quota rule is stated in
-        ``lake/publish.py``. Content addressing makes the put idempotent.
+        inside the store. The pass is local-checkpointed in the put's one
+        Spark job, so the hkeys stay on the executors and the caller's
+        actions run no put again. Each task leaves its staged share, with
+        the ids of any NULL payloads, as a small JSON file in the staging
+        directory. The driver reads those, raises the NULL-payload
+        ValueError before anything is published, and publishes with
+        :func:`~.publish.commit` under the write lease. The quota rule is
+        stated in ``lake/publish.py``. Content addressing makes the put
+        idempotent.
         """
-        from .publish import commit, stage_batches_for
+        from .publish import commit, read_shares, stage_batches_for
 
         src = df.select(F.col(id_col).cast("long").alias("id"), F.col(data_col).alias("data"))
         with self._staged_put("put_blobs") as (chunks_dir, staging):
-            rows = src.mapInPandas(
-                stage_batches_for(chunks_dir, staging, self.manifest),
-                "id long, hkey string, share string",
-            ).collect()
-            rest = [r for r in rows if r["hkey"] is None]
-            nulls = [r["id"] for r in rest if r["share"] is None]
+            hkeys = src.mapInPandas(
+                stage_batches_for(chunks_dir, staging, self.manifest), "id long, hkey string"
+            ).localCheckpoint(eager=True)
+            shares = read_shares(staging)
+            nulls = [i for s in shares for i in s["nulls"]]
             if nulls:
+                hkeys.unpersist()
                 # a NULL blob has no hkey to return (get_blobs makes the
                 # opposite guarantee: every input id appears in its output)
                 raise ValueError(
                     f"put_blobs: NULL {data_col!r} for id {max(nulls)} — "
                     "blobs must be non-null bytes (use b'' for empty)"
                 )
-            commit(self.path, [json.loads(r["share"]) for r in rest], self.quota_bytes)
-        hkeys = [(r["id"], r["hkey"]) for r in rows if r["hkey"] is not None]
-        return self.spark.createDataFrame(hkeys, "id long, hkey string")
+            commit(self.path, shares, self.quota_bytes)
+        return hkeys
 
     def put_blob(self, data: bytes) -> str:
         """Single-blob put (A14) on the driver, with no Spark job: the same

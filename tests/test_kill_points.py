@@ -105,7 +105,7 @@ else:  # vacuum, keeping the roots in arg
     old = store._active_path("chunks")
     new = f"chunks_g{uuid.uuid4().hex[:8]}"
     prefixes = {p for _f, p in list_chunk_files(old)}
-    publish.sweep(old, os.path.join(path, new), {p: {h for h in live if h[:1] == p} for p in prefixes})
+    publish.sweep(old, os.path.join(path, new), {p: {h for h in live if h[: store.prefix_len] == p} for p in prefixes})
     store._swap_in(new, trees if any(r["root_hash"] not in trees for r in rows) else None)
 print("steps", steps, flush=True)
 """

@@ -231,10 +231,10 @@ def _read_back(store, hkeys: list[str]) -> list:
 
 
 def test_put_job_counts(spark, tmp_path):
-    """A put is one map pass that routes, probes and stages, collected with
-    the tasks' staged shares before the driver commits; its hkeys come back
-    as a local DataFrame. With the caller's collect, at most 2 Spark jobs,
-    with a tree or without."""
+    """A put is one map pass that routes, probes and stages, local-
+    checkpointed in one Spark job; the driver reads the tasks' staged shares
+    from the staging directory and commits without a job. With the caller's
+    collect, at most 2 Spark jobs, with a tree or without."""
     from .test_point_read import _jobs
 
     store = Store.create(spark, str(tmp_path / "put_jobs"), prefix_len=1)
@@ -322,6 +322,58 @@ def test_vacuum_reads_roots_once(spark, tmp_path):
     assert seen.value == len(keys) - 1
     for hk, blob in list(stored.values())[:-1]:
         assert store.get(hk) == blob
+
+
+def test_vacuum_keeps_exactly_the_live_trees_manifests_rows(spark, tmp_path):
+    """A vacuum that kills no tree root links the manifests generation; one
+    that kills a tree root rewrites it with exactly the live roots' rows."""
+    import glob
+    import os
+
+    from ps_datalake_spark.lake.store import MANIFESTS_ARROW_SCHEMA, _data_files, _read_files
+
+    def rows(d):
+        t = _read_files(_data_files(d), MANIFESTS_ARROW_SCHEMA, MANIFESTS_ARROW_SCHEMA.names, None)
+        return sorted(map(tuple, (r.values() for r in t.to_pylist())))
+
+    def inodes(d):
+        return sorted(os.stat(f).st_ino for f in glob.glob(os.path.join(d, "*.parquet")))
+
+    store = Store.create(spark, str(tmp_path / "vac_trees"), prefix_len=1)
+    blobs = {
+        "keep_tree": _blob(MAX_DECRYPTED_SIZE + 3000),
+        "drop_tree": _blob(MAX_DECRYPTED_SIZE + 9000),
+        "keep_enc": _blob(3000),
+        "drop_enc": _blob(7000),
+    }
+    df = spark.createDataFrame(
+        [(i, bytearray(b)) for i, b in enumerate(blobs.values())], "id long, data binary"
+    ).coalesce(1)
+    got = {r["id"]: r["hkey"] for r in store.put_blobs(df).collect()}
+    hk = {name: got[i] for i, name in enumerate(blobs)}
+    all_rows = rows(store._active_path("manifests"))
+    keep_root = hk["keep_tree"].split(":")[1]
+    assert {r[0] for r in all_rows} == {keep_root, hk["drop_tree"].split(":")[1]}
+
+    def vacuum(names):
+        before = store._active_path("manifests")
+        roots = spark.createDataFrame([(hk[n],) for n in names], "hkey string")
+        removed = store.vacuum(roots)
+        return removed, before, store._active_path("manifests")
+
+    removed, old, new = vacuum(["keep_tree", "drop_tree", "keep_enc"])
+    assert removed == 1
+    assert new != old and inodes(new) == inodes(old)
+    assert rows(new) == all_rows
+
+    removed, old, new = vacuum(["keep_tree", "keep_enc"])
+    assert removed > 0
+    assert rows(new) == [r for r in all_rows if r[0] == keep_root]
+    assert not set(inodes(new)) & set(inodes(old)), "the manifests were rewritten"
+    for name in ("keep_tree", "keep_enc"):
+        assert store.get(hk[name]) == blobs[name]
+    kids = {r[2] for r in rows(new)}
+    assert kids <= set(r["hash"] for r in store.chunks().select("hash").collect())
 
 
 def test_quota_rule_is_the_same_for_every_put_path(spark, tmp_path):
