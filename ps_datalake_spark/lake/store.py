@@ -24,8 +24,8 @@ is one map pass that routes each blob with `route_blob`, probes only the
 hash_prefix directories its chunks touch and stages the new chunks inside
 the store (A10's probe-then-write), then a driver-side commit that renames
 the staged files into place under the write lease, up to one file per
-task and touched prefix. The hkeys stay distributed in a local checkpoint;
-the driver reads only each task's staged share. The `pslake` sink
+task and touched prefix; the hkeys come back to the driver as Arrow, and
+each task's staged share as a small JSON file. The `pslake` sink
 runs the same stager and commit, and `put_blob` runs both on the driver with
 no Spark job. A vacuum is one map pass over the live hashes repartitioned by
 prefix that hard-links every file holding no dead hash into the new
@@ -714,27 +714,32 @@ class Store:
         One map pass runs a :class:`~.publish.Stager` per task: it routes
         each blob with :func:`route_blob`, probes the hash_prefix
         directories its chunks touch and stages the new chunks as parquet
-        inside the store. The pass is local-checkpointed in the put's one
-        Spark job, so the hkeys stay on the executors and the caller's
-        actions run no put again. Each task leaves its staged share, with
-        the ids of any NULL payloads, as a small JSON file in the staging
-        directory. The driver reads those, raises the NULL-payload
-        ValueError before anything is published, and publishes with
-        :func:`~.publish.commit` under the write lease. The quota rule is
-        stated in ``lake/publish.py``. Content addressing makes the put
-        idempotent.
+        inside the store. Each task leaves its staged share, with the ids of
+        any NULL payloads, as a small JSON file in the staging directory.
+        The driver reads those, raises the NULL-payload ValueError before
+        anything is published, and publishes with :func:`~.publish.commit`
+        under the write lease. The quota rule is stated in
+        ``lake/publish.py``. Content addressing makes the put idempotent.
+
+        The pass's (id, hkey) rows are collected as Arrow in the put's one
+        Spark job and returned as a DataFrame over them (Spark keeps a small
+        table as a local relation and parallelizes a large one), so the
+        caller's actions run no put again. That costs the driver memory in
+        proportion to the number of blobs: about 150 MB per million. (A
+        local checkpoint kept them on the executors, but left the JVM
+        compiling and collecting for a few hundred ms after each put, CPU
+        that landed on the operations after it.)
         """
         from .publish import commit, read_shares, stage_batches_for
 
         src = df.select(F.col(id_col).cast("long").alias("id"), F.col(data_col).alias("data"))
         with self._staged_put("put_blobs") as (chunks_dir, staging):
-            hkeys = src.mapInPandas(
+            rows = src.mapInPandas(
                 stage_batches_for(chunks_dir, staging, self.manifest), "id long, hkey string"
-            ).localCheckpoint(eager=True)
+            ).toArrow()
             shares = read_shares(staging)
             nulls = [i for s in shares for i in s["nulls"]]
             if nulls:
-                hkeys.unpersist()
                 # a NULL blob has no hkey to return (get_blobs makes the
                 # opposite guarantee: every input id appears in its output)
                 raise ValueError(
@@ -742,7 +747,7 @@ class Store:
                     "blobs must be non-null bytes (use b'' for empty)"
                 )
             commit(self.path, shares, self.quota_bytes)
-        return hkeys
+        return self.spark.createDataFrame(rows)
 
     def put_blob(self, data: bytes) -> str:
         """Single-blob put (A14) on the driver, with no Spark job: the same

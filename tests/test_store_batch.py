@@ -231,10 +231,10 @@ def _read_back(store, hkeys: list[str]) -> list:
 
 
 def test_put_job_counts(spark, tmp_path):
-    """A put is one map pass that routes, probes and stages, local-
-    checkpointed in one Spark job; the driver reads the tasks' staged shares
-    from the staging directory and commits without a job. With the caller's
-    collect, at most 2 Spark jobs, with a tree or without."""
+    """A put is one map pass that routes, probes and stages, its hkeys
+    collected as Arrow in one Spark job; the driver reads the tasks' staged
+    shares from the staging directory and commits without a job. With the
+    caller's collect, at most 2 Spark jobs, with a tree or without."""
     from .test_point_read import _jobs
 
     store = Store.create(spark, str(tmp_path / "put_jobs"), prefix_len=1)
