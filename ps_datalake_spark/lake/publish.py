@@ -6,8 +6,9 @@ before it writes (store/mod.rs:321-326) and publishes last (:348-362):
 * A :class:`Stager` routes each blob with ``route_blob`` and probes only the
   ``hash_prefix`` directories its chunks touch, reading their ``hash``
   column with pyarrow; a chunk already stored is dropped there. The rest
-  are staged as parquet under a ``staging_<uuid>/`` directory inside the
-  store, on the same filesystem, so publishing is a rename. Pending
+  are staged as parquet under a staging directory inside the store
+  (``staging_put_<uuid>/`` for a put, ``staging_<uuid>/`` for the sink), on
+  the same filesystem, so publishing is a rename. Pending
   ciphertext is flushed whenever it crosses ``flush_bytes``, so a stager
   holds at most that much. ``Store.put_blobs`` and the ``pslake`` sink run
   one stager per Spark task; ``Store.put_blob`` runs one on the driver.
@@ -27,9 +28,10 @@ routes, counted as if none deduplicated, plus the plaintext size of every
 chunk already stored must be at most ``quota_bytes``. A put can be refused
 that would fit after dedup; none is admitted that does not fit.
 
-:func:`sweep` is vacuum's step for one task's prefixes: a file of the old
-generation that holds no dead hash is hard-linked into the new generation,
-and only a file that does is rewritten.
+:func:`sweep` is vacuum's step for one prefix, which ``Store.vacuum`` runs
+on the driver for each prefix in turn: a file of the old generation that
+holds no dead hash is hard-linked into the new generation, and only a file
+that does is rewritten.
 """
 
 from __future__ import annotations
@@ -258,40 +260,15 @@ def read_shares(staging: str) -> list[dict]:
     return shares
 
 
-def sweep(old_dir: str, new_dir: str, live: dict[str, set[str]]) -> int:
-    """Vacuum's step for the prefixes in ``live`` (prefix → its live
-    hashes): each file of the old generation that holds a live hash is
-    published into the new one, hard-linked when it holds no dead hash.
-    Returns the number of rows left behind."""
+def sweep(old_dir: str, new_dir: str, prefix: str, live: set[str]) -> int:
+    """Vacuum's step for one ``prefix`` with its ``live`` hashes: each file
+    of the old generation that holds a live hash is published into the new
+    one, hard-linked when it holds no dead hash. Returns the number of rows
+    left behind."""
     removed = 0
-    for prefix, hashes in live.items():
-        for f in _data_files(_prefix_dir(old_dir, prefix)):
-            keep = [h in hashes for h in _column([f], "hash")]
-            removed += keep.count(False)
-            if any(keep):
-                publish_file(f, _prefix_dir(new_dir, prefix), keep, link=True)
+    for f in _data_files(_prefix_dir(old_dir, prefix)):
+        keep = [h in live for h in _column([f], "hash")]
+        removed += keep.count(False)
+        if any(keep):
+            publish_file(f, _prefix_dir(new_dir, prefix), keep, link=True)
     return removed
-
-
-def sweep_batches_for(old_dir: str, new_dir: str):
-    """mapInPandas worker factory for ``Store.vacuum`` over (prefix, hash,
-    kid) rows, where a NULL hash marks a prefix directory to sweep and
-    ``kid`` names the manifests row of a tree child. Emits one row per task:
-    the rows it removed and the distinct manifests rows it got (each lands
-    in one task, the one of its child's prefix)."""
-
-    def _sweep(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        live: dict[str, set[str]] = {}
-        marked: set[str] = set()
-        kids: set[str] = set()
-        for pdf in batches:
-            kids.update(k for k in pdf["kid"] if isinstance(k, str))
-            for prefix, h in zip(pdf["prefix"], pdf["hash"]):
-                if isinstance(h, str):
-                    live.setdefault(prefix, set()).add(h)
-                else:
-                    marked.add(prefix)
-        removed = sweep(old_dir, new_dir, {p: live.get(p, set()) for p in marked})
-        yield pd.DataFrame({"removed": [removed], "kids": [len(kids)]})
-
-    return _sweep

@@ -125,7 +125,13 @@ def test_bench_full_comparable_ratio_under_bar():
     narrowed to the ceiling queries.  One retry guards a pathological
     host-noise draw; two consecutive failing draws is a real regression,
     not noise.  Per-metric min across draws: a noise window hits a whole
-    draw, not one query."""
+    draw, not one query.
+
+    Below bench._LOW_CORE_CPUS, bench.py skips the deep-scale sections by
+    design (the full protocol overran the time budget at 8 cores), so the
+    100x ceilings, which were measured at 32 cores, are asserted only when
+    the section ran; a low-core draw must record exactly that skip, and the
+    comparable-ratio bar holds at every core count."""
     import os
     import subprocess
     import sys
@@ -146,9 +152,15 @@ def test_bench_full_comparable_ratio_under_bar():
     ratios: list[float | None] = []
     best100: dict[str, float] = {}
     best_abs: dict[str, float] = {}
+    low_core = (
+        int(os.environ.get("SPARK_GRAFT_CPUS", "32")) < bench._LOW_CORE_CPUS
+        and os.environ.get("SPARK_GRAFT_FULL_SCALE", "0") != "1"
+    )
 
     def _draw_ok(payload) -> bool:
         ok = (payload["comparable"]["ratio"] or 99) < 2.0
+        if low_core:
+            return ok
         s, d = payload["scale100"]["queries"], payload["scale100"]["duckdb"]
         for q, ceil in SCALE100_CEILINGS.items():
             if q not in s or q not in d:
@@ -170,13 +182,19 @@ def test_bench_full_comparable_ratio_under_bar():
         line = [ln for ln in proc.stdout.splitlines()
                 if ln.startswith("{") and '"conf"' in ln][-1]
         payload = json.loads(line)
-        assert payload["scale100"]["error"] is None, payload["scale100"]["error"]
+        err = payload["scale100"]["error"]
+        if low_core:
+            assert err is not None and err.startswith("skipped: low-core run"), err
+        else:
+            assert err is None, err
         ratios.append(payload["comparable"]["ratio"])
         if _draw_ok(payload):
             break
     assert any(r is not None and r < 2.0 for r in ratios), (
         f"comparable ratio over the 2x bar on every draw: {ratios}"
     )
+    if low_core:
+        return
     over = {q: round(best100[q], 2) for q, c in SCALE100_CEILINGS.items()
             if best100.get(q, 99) > c}
     assert not over, (

@@ -18,9 +18,10 @@ chunk count is then the distinct contents plus the tree children plus one
 sentinel.
 
 These steps run no Spark job (``put_blob`` and the sink's ``write`` and
-``commit`` run on the driver; the vacuum's sweep runs ``publish.sweep`` per
-prefix, as its tasks do, then ``Store._swap_in``), so the child starts no
-JVM.
+``commit`` run on the driver, and the vacuum runs ``Store._vacuum_keys``,
+all of the production vacuum after its one Spark action reads the roots),
+so the child starts no JVM. After a put's re-run no put staging directory
+is left: the re-run's first put removes the crashed one's.
 """
 
 from __future__ import annotations
@@ -41,6 +42,7 @@ from ps_datalake_spark.lake.store import (
     CHUNKS_ARROW_SCHEMA,
     MANIFESTS_ARROW_SCHEMA,
     MAX_DECRYPTED_SIZE,
+    PUT_STAGING,
     _data_files,
     _read_files,
     _sentinel,
@@ -51,15 +53,13 @@ from ps_datalake_spark.lake.store import (
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 CHILD = r"""
-import json, os, shutil, sys, uuid
+import json, os, shutil, sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
 from ps_datalake_spark.lake import publish
-from ps_datalake_spark.lake.store import (
-    MANIFESTS_ARROW_SCHEMA, Store, _data_files, _read_files, _sentinel, list_chunk_files,
-)
+from ps_datalake_spark.lake.store import Store
 from ps_datalake_spark.sources.pslake_sink import PsLakeWriter
 
 op, path, kill_at = sys.argv[1], sys.argv[2], int(sys.argv[3])
@@ -92,21 +92,8 @@ elif op == "sink":
         {"id": list(range(len(arg))), "data": [bytes.fromhex(b) for b in arg]}
     )
     w.commit([w.write(iter([batch]))])
-else:  # vacuum, keeping the roots in arg
-    kinds = [hk.split(":") for hk in arg]
-    trees = {k[1] for k in kinds if k[0] == "tree"}
-    rows = _read_files(
-        _data_files(store._active_path("manifests")), MANIFESTS_ARROW_SCHEMA,
-        ["root_hash", "child_hash"], None,
-    ).to_pylist()
-    live = {k[1] for k in kinds if k[0] in ("plain", "enc")}
-    live |= {r["child_hash"] for r in rows if r["root_hash"] in trees}
-    live.add(_sentinel(store.manifest["cipher"], store.inline_max)[0])
-    old = store._active_path("chunks")
-    new = f"chunks_g{uuid.uuid4().hex[:8]}"
-    prefixes = {p for _f, p in list_chunk_files(old)}
-    publish.sweep(old, os.path.join(path, new), {p: {h for h in live if h[: store.prefix_len] == p} for p in prefixes})
-    store._swap_in(new, trees if any(r["root_hash"] not in trees for r in rows) else None)
+else:  # vacuum, keeping the roots in arg: all of it after the roots' one Spark action
+    store._vacuum_keys(pa.chunked_array([arg], pa.string()))
 print("steps", steps, flush=True)
 """
 
@@ -211,6 +198,7 @@ def _matrix(spark, base, op: str, arg: list, expect):
         assert code == 0, k
         store = _check(spark, path, handed_out, blobs, final, final)
         assert len(_chunk_hashes(store)) == len(final)
+        assert not [d for d in os.listdir(path) if d.startswith(PUT_STAGING)], k
         shutil.rmtree(path)
         shutil.rmtree(path + "_hkeys", ignore_errors=True)
     return n_steps
@@ -228,8 +216,10 @@ def test_put_survives_a_crash_at_every_step(spark, base, op):
         blob_of[route_blob(b, store.manifest["cipher"], store.inline_max)[0]] = b
     before = _hashes_of(store, list(named.values())) | {_sentinel(store.manifest["cipher"], store.inline_max)[0]}
     after = before | _hashes_of(store, new)
+    orphaned = []  # did a torn store keep the crashed put's staging?
 
     def expect(path, out):
+        orphaned.append(any(d.startswith(PUT_STAGING) for d in os.listdir(path)))
         if op == "put":
             handed = [h for h in out if ":" in h]
         else:
@@ -239,6 +229,7 @@ def test_put_survives_a_crash_at_every_step(spark, base, op):
         return list(hkeys.values()) + handed, blob_of, before, after, after
 
     assert _matrix(spark, base, op, [b.hex() for b in new], expect) >= 8
+    assert any(orphaned) == (op == "put")
 
 
 def test_vacuum_survives_a_crash_at_every_step(spark, base):

@@ -266,9 +266,10 @@ def test_put_blob_runs_no_spark_job(spark, tmp_path):
 
 
 def test_vacuum_removing_nothing_links_every_file(spark, tmp_path):
-    """A vacuum whose roots keep everything rewrites no data: every file of
-    the new chunks and manifests generations is a hard link of its twin in
-    the previous one, which still reads."""
+    """A vacuum whose roots keep everything runs one Spark job, the read of
+    the roots, and rewrites no data: every file of the new chunks and
+    manifests generations is a hard link of its twin in the previous one,
+    which still reads."""
     import glob
     import os
 
@@ -283,7 +284,7 @@ def test_vacuum_removing_nothing_links_every_file(spark, tmp_path):
     before = {sub: store._active_path(sub) for sub in ("chunks", "manifests")}
     n = store.chunks().count()
     out = {}
-    assert _jobs(spark, lambda: out.update(removed=store.vacuum(roots))) <= 4
+    assert _jobs(spark, lambda: out.update(removed=store.vacuum(roots))) <= 1
     assert out["removed"] == 0
     for sub, old in before.items():
         new = store._active_path(sub)
@@ -322,6 +323,48 @@ def test_vacuum_reads_roots_once(spark, tmp_path):
     assert seen.value == len(keys) - 1
     for hk, blob in list(stored.values())[:-1]:
         assert store.get(hk) == blob
+
+
+def test_vacuum_parses_roots_as_spark_split_does(spark, tmp_path):
+    """The vacuum parses each root on the driver as ``F.split(hkey, ':')``
+    with item 0 for the kind and item 1 for the hash does. NULL, raw,
+    malformed and duplicate roots give the same removed count and the same
+    chunk set as that parse: only a plain/enc hash or a tree root in the
+    manifests keeps anything. A key with no colon has no item 1 and keeps
+    nothing (``getItem(1)`` would raise on it under ANSI mode; ``get`` gives
+    NULL)."""
+    from pyspark.sql import functions as F
+
+    from ps_datalake_spark.lake.store import _sentinel
+
+    store = Store.create(spark, str(tmp_path / "vac_parse"), prefix_len=1)
+    stored = _put_mixed(spark, store)
+    keys = {name: hk for name, (hk, _blob) in stored.items()}
+    h = {name: hk.split(":")[1] for name, hk in keys.items()}
+    roots = [
+        None, "", "enc", "enc:", "zzz:1", "no colon", "enc:../..:x:1", keys["raw"],
+        keys["tree"], keys["tree"], keys["enc0"], keys["enc0"],
+        f"plain:{h['enc1']}",  # the kind need not match the stored enc
+        f"enc:{h['enc2']}",  # two fields are enough
+        f"tree:{h['enc3']}",  # a tree root with no manifests row
+        f"enc:{h['enc4'].upper()}",
+        f"enc:{h['enc5'][:1]}",  # a bare prefix
+    ]
+    df = spark.createDataFrame([(r,) for r in roots], "hkey string")
+    parts = F.split("hkey", ":")
+    parsed = df.select(parts.getItem(0).alias("kind"), F.get(parts, 1).alias("hash"))
+    trees = parsed.where(F.col("kind") == "tree").select(F.col("hash").alias("root_hash"))
+    direct = parsed.where(F.col("kind").isin("plain", "enc")).select("hash")
+    kids = trees.join(store.manifests(), "root_hash").select("child_hash")
+    live = {r[0] for r in direct.union(kids).collect()}
+    live.add(_sentinel(store.manifest["cipher"], store.inline_max)[0])
+    before = {r[0] for r in store.chunks().select("hash").collect()}
+    want = before & live
+    assert len(want) < len(before)
+    assert store.vacuum(df) == len(before - want)
+    assert sorted(r[0] for r in store.chunks().select("hash").collect()) == sorted(want)
+    for name in ("tree", "enc0", "enc1", "enc2"):
+        assert store.get(keys[name]) == stored[name][1]
 
 
 def test_vacuum_keeps_exactly_the_live_trees_manifests_rows(spark, tmp_path):
